@@ -1,10 +1,16 @@
-"""The extraction pipeline: pages -> (url, extracted_text, spans, ...).
+"""The parse stages: pages -> one result table per output family.
 
-Spark shape (SURVEY.md §3.1 "Spark version"): a single narrow stage --
-scan -> iterator-style mapInPandas (Arrow-batched, no per-row Python
+Spark shape (SURVEY.md §3.1 "Spark version"): every stage is a single
+narrow scan -> iterator-style mapInArrow (Arrow-batched, no per-row Python
 marshalling at the row level; the parser itself is the per-document state
 machine) -> result columns.  No shuffle is introduced by extraction itself;
 repartitioning for skew is the caller's choice (see lineage.py).
+
+All eight public stages (extract_pages, serialize_pages, nodes_of,
+tokens_of, bookmarks_of, tables_of, metadata_of, jsonld_of) are short
+projections of ONE guarded loop, _parse_stage: it owns the per-doc byte
+cap, the `content_type` charset seed, per-doc failure isolation and the
+id-column handling, so every family decodes and clips a page the same way.
 
 DTD tables are loaded once per executor process from the packaged dtd.json
 (module-level cache in closure_html_spark.dtd) -- the broadcast-variable
@@ -13,16 +19,19 @@ equivalent for static build artifacts shipped via --py-files.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..dtd import load_dtd
-from ..extract import extract_main_content
+from ..dtd import PCDATA, load_dtd
+from ..extract import (
+    extract_main_content,
+    jsonld_of_doc,
+    metadata_of_doc,
+    tables_of_doc,
+)
 from ..parser.charset import decode_html
 from ..parser.pda import parse_html, sgml_parse
+from ..parser.tokenizer import Tokenizer
 from ..serialize import serialize_doc
 
 # result columns in declaration order; a `columns=` subset of these keys
@@ -101,11 +110,6 @@ def _doc_links_base(doc, want_anchors: bool = True) \
     return out, anchors, base
 
 
-def _doc_links(doc) -> list[str]:
-    return _doc_links_base(doc)[0]
-
-EXTRACT_RESULT_COLS = ", ".join(f"{k} {v}" for k, v in RESULT_COL_DDL.items())
-
 # main_text reassembled JVM-side from kept spans: the text bytes cross the
 # Python->Arrow boundary once (extracted_text), not twice
 _MAIN_TEXT_EXPR = (
@@ -113,371 +117,100 @@ _MAIN_TEXT_EXPR = (
     "(acc, s) -> acc || substr(extracted_text, s.start + 1, s.end - s.start))"
 )
 
-
-def _extract_schema(df: DataFrame, id_cols: tuple[str, ...]) -> str:
-    id_fields = []
-    for name, dtype in df.dtypes:
-        if name in id_cols:
-            id_fields.append(f"{name} {dtype}")
-    return ", ".join(id_fields) + ", " + EXTRACT_RESULT_COLS
-
-
 MAX_DOC_BYTES_DEFAULT = 64 * 1024 * 1024  # 64 MiB
 
 
-def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
-                  default_charset: str = "utf-8",
-                  engine: str = "arrow",
-                  columns: tuple[str, ...] | None = None,
-                  packed_spans: bool = False,
-                  out_batch_rows: int | None = None,
-                  max_doc_bytes: int | None = MAX_DOC_BYTES_DEFAULT
-                  ) -> DataFrame:
-    """Parse + extract every page.  Keeps `id_cols` as passthrough keys.
+def _parse_stage(df: DataFrame, id_cols: tuple[str, ...], out_ddl: str,
+                 doc_fn, error_row=None, *,
+                 dtd_name: str = "html-4.0-frameset",
+                 max_doc_bytes: int | None = MAX_DOC_BYTES_DEFAULT,
+                 out_batch_rows: int | None = None) -> DataFrame:
+    """The one decode -> parse -> isolate loop behind every parse stage.
 
-    max_doc_bytes: per-document byte cap (default 64 MiB, None disables).
-    The session's Arrow batch caps bound the BATCH, but one pathological
-    page -- a 500 MB binary mislabeled text/html -- is still one row
-    inside it, and parse output (node arrays, spans, serialized text) is
-    proportional to input, so a single such row can blow a worker's
-    memory at 10^12-document scale.  Oversize pages are truncated to the
-    cap and parsed normally (the reference's own buffered xstream reads
-    never require whole-document lookahead), with the row marked
-    charset='error:oversize' and one level-5 parse warning counted --
-    monitoring queries see exactly how many docs were clipped.
+    Each input row's html bytes are cut to `max_doc_bytes` (None disables
+    the cap), decoded with the row's `content_type` charset parameter as
+    the seed when the input has that column (a <meta> charset still
+    overrides it, mirroring the reference's mid-stream decoder switch --
+    charset.py), and handed to `doc_fn(dtd, text, charset, oversize)`,
+    which parses (or only tokenizes) and returns the page's output.  The
+    session's Arrow batch caps bound the BATCH, but one pathological page
+    -- a 500 MB binary mislabeled text/html -- is still one row inside it,
+    and parse output is proportional to input, so the cap is what keeps a
+    single such row from blowing a worker's memory.
 
-    If the input has a `content_type` column (WARC-style HTTP header), its
-    charset parameter seeds the decoder; a <meta> charset still overrides
-    it, mirroring the reference's mid-stream decoder switch (charset.py).
+    Two output shapes:
+    - one row per page (`error_row` given): doc_fn returns the page's
+      value; a page whose decode or doc_fn raises gets `error_row(exc)`
+      instead, so ingest accounting stays 1:1, and the id columns pass
+      through zero-copy from the input batch;
+    - any number of rows per page (`error_row` None): doc_fn returns a
+      list of row values, a failing page contributes zero rows, and the
+      id columns are replicated by a C++-side take() gather.
+    doc_fn's whole result is staged before it is appended, so a failure
+    can never leave the output columns at different lengths.
 
-    engine="arrow" (default) runs the stage as mapInArrow, assembling the
-    output columns directly as pyarrow buffers: strings go Python->Arrow
-    once, spans/warn_levels are built as ListArrays from flat primitive
-    arrays (no per-span dict objects), and id columns pass through
-    zero-copy from the input batch.  engine="pandas" keeps the round-2
-    mapInPandas path (object-dtype pandas -> Arrow re-conversion per
-    column) as the A/B baseline; results are identical
-    (tests/test_spark_pipeline_edge.py).
-
-    columns: optional subset of RESULT_COL_DDL keys -- the metadata-now /
-    text-lazily split.  Column pruning cannot reach inside a Python map
-    stage, so a monitoring query selecting only warn_levels would still
-    pay the full text build + Arrow transfer; passing
-    columns=("warn_levels",) skips building the text payload entirely
-    (and skips the span scorer when no text column is requested).
-    main_text is only attached when extracted_text AND spans are present.
-    Requires engine="arrow".  columns=None builds _DEFAULT_COLS, which
-    EXCLUDES links/base: they need a second full-DOM walk (the span
-    scorer's walk starts at BODY and cannot see HEAD, where BASE lives),
-    so only frontier consumers passing columns=("links", "base") pay it.
-    The pandas engine, kept as the value-parity baseline, always emits
-    every column.
-
-    packed_spans=True (arrow only, SCALE.md frontier #2 prototype) replaces
-    the `spans` list-of-struct column with `spans_packed binary`: all spans
-    of a doc packed little-endian as (int32 start, int32 end, float64
-    score, int32 keep) = 20 B/span, built by one numpy tobytes() per batch
-    -- one Arrow child buffer instead of four + offsets.  The consumer
-    decodes with closure_html_spark.spark.pipeline.unpack_spans (numpy) or
-    reads span COUNT as length(spans_packed)/20 JVM-side.  main_text is
-    not attached (it needs the struct form).
-
-    out_batch_rows (arrow only, SCALE.md frontier #2 lever): coalesce
-    OUTPUT batches to at least this many rows before yielding -- fewer,
-    larger Arrow IPC messages to the JVM (input batch sizing is capped by
-    session.py's row+byte bounds and is not affected; peak worker memory
-    grows by the buffered output columns, which are ~1x input text)."""
-    if engine not in ("arrow", "pandas"):
-        raise ValueError(f"engine must be 'arrow' or 'pandas', got {engine!r}")
-    if columns is not None and engine != "arrow":
-        raise ValueError("columns= projection requires engine='arrow'")
-    if packed_spans and engine != "arrow":
-        raise ValueError("packed_spans requires engine='arrow'")
-    if out_batch_rows is not None and engine != "arrow":
-        raise ValueError("out_batch_rows requires engine='arrow'")
-    if engine == "arrow":
-        return _extract_pages_arrow(df, id_cols, default_charset, columns,
-                                    packed_spans, out_batch_rows,
-                                    max_doc_bytes)
-    schema = _extract_schema(df, id_cols)
-    has_ct = "content_type" in df.columns
-    cols = list(id_cols) + ["html"] + (["content_type"] if has_ct else [])
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dtd = load_dtd()
-        for pdf in batches:
-            out = {c: pdf[c] for c in id_cols}
-            titles, texts, spans_col, links_col, base_col = [], [], [], [], []
-            anchors_col = []
-            n_nodes, n_warns, warn_levels, charsets = [], [], [], []
-            cts = pdf["content_type"] if has_ct else None
-            for idx, raw in enumerate(pdf["html"]):
-                # stage every per-doc value in locals, append once below:
-                # an exception anywhere in the try can never leave the
-                # column lists at different lengths (round-4 verdict #3)
-                try:
-                    raw_b = bytes(raw)
-                    oversize = (max_doc_bytes is not None
-                                and len(raw_b) > max_doc_bytes)
-                    if oversize:
-                        raw_b = raw_b[:max_doc_bytes]
-                    text, cs = decode_html(
-                        raw_b, default_charset,
-                        cts.iloc[idx] if cts is not None else None)
-                    doc = parse_html(dtd, text)
-                    res = extract_main_content(doc, dtd)
-                    title_v = res["title"]
-                    text_v = res["extracted_text"]
-                    spans_v = [
-                        {"start": s, "end": e, "score": sc, "keep": k}
-                        for s, e, sc, k in res["spans"]]
-                    links_v, anchors_v, base_v = _doc_links_base(doc)
-                    nn, nw = len(doc.name), len(doc.warnings)
-                    # parse-warn levels 1-5 (sgml-parse.lisp:285-292) as
-                    # per-doc counters -> aggregable corpus metrics
-                    lv = [0, 0, 0, 0, 0]
-                    for level, _ in doc.warnings:
-                        if 1 <= level <= 5:
-                            lv[level - 1] += 1
-                    if oversize:
-                        cs = "error:oversize"
-                        lv[4] += 1
-                        nw += 1
-                except Exception as exc:  # never kill the batch for one doc
-                    title_v = text_v = ""
-                    spans_v, links_v, anchors_v, base_v = [], [], [], None
-                    nn, nw = 0, -1
-                    lv = [0, 0, 0, 0, 0]
-                    cs = f"error:{type(exc).__name__}"
-                titles.append(title_v)
-                texts.append(text_v)
-                spans_col.append(spans_v)
-                links_col.append(links_v)
-                anchors_col.append(anchors_v)
-                base_col.append(base_v)
-                n_nodes.append(nn)
-                n_warns.append(nw)
-                warn_levels.append(lv)
-                charsets.append(cs)
-            out.update(title=titles, extracted_text=texts,
-                       spans=spans_col, links=links_col,
-                       anchors=anchors_col, base=base_col,
-                       n_nodes=n_nodes,
-                       n_warns=n_warns, warn_levels=warn_levels,
-                       charset=charsets)
-            yield pd.DataFrame(out)
-
-    return (df.select(*cols).mapInPandas(fn, schema)
-            .withColumn("main_text", F.expr(_MAIN_TEXT_EXPR)))
-
-
-_SPAN_PACK_DTYPE = [("start", "<i4"), ("end", "<i4"), ("score", "<f8"),
-                    ("keep", "<i4")]  # 20 B per span, little-endian
-
-
-def unpack_spans(buf: bytes) -> list[tuple[int, int, float, bool]]:
-    """Decode one spans_packed value back to (start, end, score, keep)
-    tuples (numpy structured-array view, zero parsing loop)."""
-    import numpy as np
-    rec = np.frombuffer(buf, dtype=_SPAN_PACK_DTYPE)
-    return [(int(r["start"]), int(r["end"]), float(r["score"]),
-             bool(r["keep"])) for r in rec]
-
-
-def _extract_pages_arrow(df: DataFrame, id_cols: tuple[str, ...],
-                         default_charset: str,
-                         columns: tuple[str, ...] | None = None,
-                         packed_spans: bool = False,
-                         out_batch_rows: int | None = None,
-                         max_doc_bytes: int | None = MAX_DOC_BYTES_DEFAULT
-                         ) -> DataFrame:
-    """mapInArrow body of extract_pages: output-column materialization is
-    the stage's dominant cost after the round-2 parser fusion (~3x parse
-    CPU, SCALE.md frontier #1), and most of it was pandas object-dtype
-    round-tripping.  Here every result column is assembled once, directly
-    in Arrow layout; a `columns` subset skips unrequested payloads."""
+    Values are tuples in `out_ddl` order.  Each result column is built by
+    one pa.array() call against its schema type, so nested values (lists
+    of span tuples, attr dicts) go to Arrow's C++ converter, which writes
+    the flat child buffers directly -- no per-span Python objects beyond
+    the tuples the parser already made.  out_batch_rows coalesces OUTPUT
+    batches to at least that many rows before yielding -- fewer, larger
+    Arrow IPC messages to the JVM, at the cost of buffering the output
+    columns (SCALE.md frontier #2 lever)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
-    if columns is None:
-        wanted = _DEFAULT_COLS
-    else:
-        unknown = set(columns) - set(RESULT_COL_DDL)
-        if unknown:
-            raise ValueError(f"unknown result columns: {sorted(unknown)}")
-        wanted = tuple(k for k in RESULT_COL_DDL if k in columns)
-    # the span scorer only runs when some text-derived column is requested
-    need_extract = bool({"title", "extracted_text", "spans"} & set(wanted))
-    pack = packed_spans and "spans" in wanted
-
-    # id columns in the order the input declares them, then result subset
-    ids = [name for name, _ in df.dtypes if name in id_cols]
+    # id columns in the order the input declares them, then the results
+    ids = [n for n, _ in df.dtypes if n in id_cols]
     id_ddl = ", ".join(f"{n} {t}" for n, t in df.dtypes if n in id_cols)
-
-    def _ddl(k):
-        if k == "spans" and pack:
-            return "spans_packed binary"
-        return f"{k} {RESULT_COL_DDL[k]}"
-
-    schema = id_ddl + ", " + ", ".join(_ddl(k) for k in wanted)
+    schema = ", ".join(s for s in (id_ddl, out_ddl) if s)
     # resolved on the driver (needs the JVM DDL parser); captured by fn
     arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
+    out_types = [f.type for f in arrow_schema][len(ids):]
     has_ct = "content_type" in df.columns
-    cols = ids + ["html"] + (["content_type"] if has_ct else [])
-    i32 = pa.int32()
+    one_row = error_row is not None
 
-    def _fn_per_batch(batches):
-        dtd = load_dtd()
+    def per_batch(batches):
+        dtd = load_dtd(dtd_name)
         for batch in batches:
             htmls = batch.column("html").to_pylist()
-            cts = (batch.column("content_type").to_pylist()
-                   if has_ct else None)
-            n = len(htmls)
-            titles, texts, charsets = [], [], []
-            n_nodes, n_warns = [], []
-            # spans + warn_levels + links as flat child arrays + offsets:
-            # the ListArray/StructArray build is one memcpy-style pass, no
-            # per-span Python dicts
-            sp_off = [0]
-            sp_start, sp_end, sp_score, sp_keep = [], [], [], []
-            lk_off, lk_flat, an_flat = [0], [], []
-            bases = []
-            wl_flat = []
-            need_links = "links" in wanted
-            need_anchors = "anchors" in wanted
-            need_base = "base" in wanted
-            for idx in range(n):
-                # stage every per-doc value in locals inside the try and
-                # append in ONE block after it: the flat-array + offsets
-                # layout is only sound if every column advances exactly
-                # once per doc, and an exception raised between appends
-                # would shift every later row in the batch (round-4
-                # verdict #3) -- structurally impossible this way
+            cts = (batch.column("content_type").to_pylist() if has_ct
+                   else [None] * len(htmls))
+            values, take = [], []
+            for idx, (raw, ct) in enumerate(zip(htmls, cts)):
                 try:
-                    raw_b = bytes(htmls[idx])
+                    raw = bytes(raw)
                     oversize = (max_doc_bytes is not None
-                                and len(raw_b) > max_doc_bytes)
+                                and len(raw) > max_doc_bytes)
                     if oversize:
-                        raw_b = raw_b[:max_doc_bytes]
-                    text, cs = decode_html(
-                        raw_b, default_charset,
-                        cts[idx] if cts is not None else None)
-                    doc = parse_html(dtd, text)
-                    if need_extract:
-                        res = extract_main_content(doc, dtd,
-                                                   with_main_text=False)
-                        title_v = res["title"]
-                        text_v = res["extracted_text"]
-                        spans_v = res["spans"]
-                    else:
-                        title_v = text_v = ""
-                        spans_v = ()
-                    if need_links or need_anchors or need_base:
-                        links_v, anchors_v, base_v = _doc_links_base(
-                            doc, want_anchors=need_anchors)
-                    else:
-                        links_v, anchors_v, base_v = (), (), None
-                    nn, nw = len(doc.name), len(doc.warnings)
-                    lv = (0, 0, 0, 0, 0)
-                    if nw or oversize:
-                        lv = [0, 0, 0, 0, 0]
-                        for level, _ in doc.warnings:
-                            if 1 <= level <= 5:
-                                lv[level - 1] += 1
-                    if oversize:
-                        cs = "error:oversize"
-                        lv[4] += 1
-                        nw += 1
+                        raw = raw[:max_doc_bytes]
+                    text, cs = decode_html(raw, content_type=ct)
+                    got = doc_fn(dtd, text, cs, oversize)
                 except Exception as exc:  # never kill the batch for one doc
-                    title_v = text_v = ""
-                    spans_v, links_v, anchors_v, base_v = (), (), (), None
-                    nn, nw = 0, -1
-                    lv = (0, 0, 0, 0, 0)
-                    cs = f"error:{type(exc).__name__}"
-                titles.append(title_v)
-                texts.append(text_v)
-                for s, e, sc, k in spans_v:
-                    sp_start.append(s)
-                    sp_end.append(e)
-                    sp_score.append(sc)
-                    sp_keep.append(k)
-                sp_off.append(len(sp_start))
-                lk_flat.extend(links_v)
-                an_flat.extend(anchors_v)
-                lk_off.append(len(lk_flat))
-                bases.append(base_v)
-                n_nodes.append(nn)
-                n_warns.append(nw)
-                wl_flat.extend(lv)
-                charsets.append(cs)
-            built = {}
-            if "title" in wanted:
-                built["title"] = pa.array(titles, pa.string())
-            if "extracted_text" in wanted:
-                built["extracted_text"] = pa.array(texts, pa.string())
-            if "spans" in wanted and pack:
-                import numpy as np
-                rec = np.empty(len(sp_start), dtype=_SPAN_PACK_DTYPE)
-                rec["start"] = sp_start
-                rec["end"] = sp_end
-                rec["score"] = sp_score
-                rec["keep"] = sp_keep
-                # one value buffer + scaled offsets: a BinaryArray built
-                # from raw buffers, no per-doc bytes objects.  Offsets are
-                # computed in int64 and checked before the int32 cast --
-                # silent wrap past ~107M spans/batch would corrupt every
-                # row (unreachable under the session's batch caps, but the
-                # caps are config, not law)
-                off = np.asarray(sp_off, dtype=np.int64) * rec.itemsize
-                if off[-1] > np.iinfo(np.int32).max:
-                    raise OverflowError(
-                        f"packed-spans batch needs {off[-1]} offset bytes; "
-                        "int32 BinaryArray offsets overflow -- lower the "
-                        "Arrow batch size")
-                off = off.astype(np.int32)
-                built["spans"] = pa.Array.from_buffers(
-                    pa.binary(), n,
-                    [None, pa.py_buffer(off.tobytes()),
-                     pa.py_buffer(rec.tobytes())])
-            elif "spans" in wanted:
-                built["spans"] = pa.ListArray.from_arrays(
-                    pa.array(sp_off, i32),
-                    pa.StructArray.from_arrays(
-                        [pa.array(sp_start, i32), pa.array(sp_end, i32),
-                         pa.array(sp_score, pa.float64()),
-                         pa.array(sp_keep, pa.bool_())],
-                        names=["start", "end", "score", "keep"]))
-            if "links" in wanted:
-                built["links"] = pa.ListArray.from_arrays(
-                    pa.array(lk_off, i32), pa.array(lk_flat, pa.string()))
-            if "anchors" in wanted:
-                # one anchor per link: the links offsets describe this
-                # child array too
-                built["anchors"] = pa.ListArray.from_arrays(
-                    pa.array(lk_off, i32), pa.array(an_flat, pa.string()))
-            if "base" in wanted:
-                built["base"] = pa.array(bases, pa.string())
-            if "n_nodes" in wanted:
-                built["n_nodes"] = pa.array(n_nodes, i32)
-            if "n_warns" in wanted:
-                built["n_warns"] = pa.array(n_warns, i32)
-            if "warn_levels" in wanted:
-                built["warn_levels"] = pa.ListArray.from_arrays(
-                    pa.array(range(0, 5 * n + 5, 5), i32),
-                    pa.array(wl_flat, i32))
-            if "charset" in wanted:
-                built["charset"] = pa.array(charsets, pa.string())
-            arrays = ([batch.column(c) for c in ids] +  # zero-copy ids
-                      [built[k] for k in wanted])
-            out = pa.RecordBatch.from_arrays(arrays,
-                                             names=arrow_schema.names)
+                    if one_row:
+                        values.append(error_row(exc))
+                    continue
+                if one_row:
+                    values.append(got)
+                else:
+                    values.extend(got)
+                    take.extend([idx] * len(got))
+            if one_row:
+                id_arrays = [batch.column(c) for c in ids]  # zero-copy
+            else:
+                gather = pa.array(take, pa.int32())
+                id_arrays = [batch.column(c).take(gather) for c in ids]
+            cols = list(zip(*values)) if values else [()] * len(out_types)
+            out = pa.RecordBatch.from_arrays(
+                id_arrays + [pa.array(c, t) for c, t in zip(cols, out_types)],
+                names=arrow_schema.names)
             # nested field names differ only cosmetically (item vs
             # element); cast is metadata-level, buffers are shared
             yield out.cast(arrow_schema, safe=False)
 
     if out_batch_rows is None:
-        fn = _fn_per_batch
+        fn = per_batch
     else:
         def fn(batches):
             def combine(bufs):
@@ -489,7 +222,7 @@ def _extract_pages_arrow(df: DataFrame, id_cols: tuple[str, ...],
                 return merged[0]
 
             buf, rows = [], 0
-            for b in _fn_per_batch(batches):
+            for b in per_batch(batches):
                 buf.append(b)
                 rows += b.num_rows
                 if rows >= out_batch_rows:
@@ -498,481 +231,245 @@ def _extract_pages_arrow(df: DataFrame, id_cols: tuple[str, ...],
             if buf:
                 yield combine(buf)
 
-    result = df.select(*cols).mapInArrow(fn, schema)
-    if "extracted_text" in wanted and "spans" in wanted and not pack:
+    in_cols = ids + ["html"] + (["content_type"] if has_ct else [])
+    return df.select(*in_cols).mapInArrow(fn, schema)
+
+
+def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
+                  columns: tuple[str, ...] | None = None,
+                  out_batch_rows: int | None = None,
+                  max_doc_bytes: int | None = MAX_DOC_BYTES_DEFAULT
+                  ) -> DataFrame:
+    """Parse + extract every page.  Keeps `id_cols` as passthrough keys.
+
+    max_doc_bytes: per-document byte cap (default 64 MiB, None disables;
+    see _parse_stage).  Oversize pages are truncated to the cap and
+    parsed normally (the reference's own buffered xstream reads never
+    require whole-document lookahead), with the row marked
+    charset='error:oversize' and one level-5 parse warning counted --
+    monitoring queries see exactly how many docs were clipped.  A page
+    that fails outright yields charset='error:<Type>' with n_warns=-1.
+
+    Output columns are assembled directly as pyarrow arrays: strings go
+    Python->Arrow once, spans/warn_levels/links are converted straight
+    from the parser's per-doc lists of tuples (no per-span dict objects),
+    and id columns pass through zero-copy from the input batch.
+
+    columns: optional subset of RESULT_COL_DDL keys -- the metadata-now /
+    text-lazily split.  Column pruning cannot reach inside a Python map
+    stage, so a monitoring query selecting only warn_levels would still
+    pay the full text build + Arrow transfer; passing
+    columns=("warn_levels",) skips building the text payload entirely
+    (and skips the span scorer when no text column is requested).
+    main_text is only attached when extracted_text AND spans are present.
+    columns=None builds _DEFAULT_COLS, which EXCLUDES links/base: they
+    need a second full-DOM walk (the span scorer's walk starts at BODY and
+    cannot see HEAD, where BASE lives), so only frontier consumers passing
+    columns=("links", "base") pay it.
+
+    out_batch_rows: coalesce output batches to at least this many rows
+    (see _parse_stage; input batch sizing is capped by session.py's
+    row+byte bounds and is not affected)."""
+    if columns is None:
+        wanted = _DEFAULT_COLS
+    else:
+        unknown = set(columns) - set(RESULT_COL_DDL)
+        if unknown:
+            raise ValueError(f"unknown result columns: {sorted(unknown)}")
+        wanted = tuple(k for k in RESULT_COL_DDL if k in columns)
+    # the span scorer only runs when some text-derived column is requested
+    need_extract = bool({"title", "extracted_text", "spans"} & set(wanted))
+    need_links = bool({"links", "anchors", "base"} & set(wanted))
+    need_anchors = "anchors" in wanted
+
+    def doc_fn(dtd, text, cs, oversize):
+        doc = parse_html(dtd, text)
+        if need_extract:
+            res = extract_main_content(doc, dtd, with_main_text=False)
+            title_v, text_v, spans_v = \
+                res["title"], res["extracted_text"], res["spans"]
+        else:
+            title_v, text_v, spans_v = "", "", ()
+        if need_links:
+            links_v, anchors_v, base_v = _doc_links_base(
+                doc, want_anchors=need_anchors)
+        else:
+            links_v, anchors_v, base_v = (), (), None
+        nn, nw = len(doc.name), len(doc.warnings)
+        lv = (0, 0, 0, 0, 0)
+        if nw or oversize:
+            # parse-warn levels 1-5 (sgml-parse.lisp:285-292) as per-doc
+            # counters -> aggregable corpus metrics
+            lv = [0, 0, 0, 0, 0]
+            for level, _ in doc.warnings:
+                if 1 <= level <= 5:
+                    lv[level - 1] += 1
+        if oversize:
+            cs = "error:oversize"
+            lv[4] += 1
+            nw += 1
+        row = dict(title=title_v, extracted_text=text_v, spans=spans_v,
+                   links=links_v, anchors=anchors_v, base=base_v,
+                   n_nodes=nn, n_warns=nw, warn_levels=lv, charset=cs)
+        return tuple(row[k] for k in wanted)
+
+    def error_row(exc):
+        row = dict(title="", extracted_text="", spans=(), links=(),
+                   anchors=(), base=None, n_nodes=0, n_warns=-1,
+                   warn_levels=(0, 0, 0, 0, 0),
+                   charset=f"error:{type(exc).__name__}")
+        return tuple(row[k] for k in wanted)
+
+    result = _parse_stage(
+        df, id_cols, ", ".join(f"{k} {RESULT_COL_DDL[k]}" for k in wanted),
+        doc_fn, error_row, max_doc_bytes=max_doc_bytes,
+        out_batch_rows=out_batch_rows)
+    if "extracted_text" in wanted and "spans" in wanted:
         result = result.withColumn("main_text", F.expr(_MAIN_TEXT_EXPR))
     return result
 
 
-def serialize_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
-                    default_charset: str = "utf-8") -> DataFrame:
+def serialize_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",)
+                    ) -> DataFrame:
     """Parse + re-serialize every page to canonical escaped HTML
     (the reference's clean-html round trip, doc/examples.xml:60-77).
-    mapInArrow: html_out is the largest string column in the system
-    (~1x input), so it goes Python->Arrow exactly once; ids zero-copy."""
-    import pyarrow as pa
-
-    ids = [name for name, _ in df.dtypes if name in id_cols]
-    id_fields = ", ".join(f"{n} {t}" for n, t in df.dtypes if n in id_cols)
-    schema = id_fields + ", html_out string"
-    cols = ids + ["html"]
-
-    def fn(batches):
-        dtd = load_dtd()
-        for batch in batches:
-            outs = []
-            for raw in batch.column("html").to_pylist():
-                try:
-                    text, _ = decode_html(bytes(raw), default_charset)
-                    outs.append(serialize_doc(parse_html(dtd, text), dtd))
-                except Exception:
-                    outs.append("")
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(c) for c in ids]
-                + [pa.array(outs, pa.string())],
-                names=ids + ["html_out"])
-
-    return df.select(*cols).mapInArrow(fn, schema)
+    html_out is the largest string column in the system (~1x input), so
+    it goes Python->Arrow exactly once; a failed page yields ""."""
+    return _parse_stage(
+        df, id_cols, "html_out string",
+        lambda dtd, text, cs, oversize:
+            (serialize_doc(parse_html(dtd, text), dtd),),
+        lambda exc: ("",))
 
 
-def nodes_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
-             default_charset: str = "utf-8",
-             engine: str = "arrow") -> DataFrame:
+def _node_rows(dtd, text, cs, oversize):
+    doc = parse_html(dtd, text)
+    # renumber pre-order from the post-mortem root
+    remap = {}
+    for n, d in doc.walk():
+        remap[n] = len(remap)
+    # the dict round-trip dedups repeated attr names (last wins) --
+    # Spark's map-key uniqueness requirement
+    return [(remap[n], remap.get(doc.parent[n], -1), d, doc.name[n],
+             dict(doc.attrs[n]) if doc.attrs[n] else {}, doc.text[n])
+            for n, d in doc.walk()]
+
+
+def nodes_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",)
+             ) -> DataFrame:
     """Exploded `nodes` table: one row per DOM node -- the relational query
     surface over parsed documents (SURVEY.md §2.8 / FIXTURES.md §2).
-
-    engine="arrow" (default) assembles the per-node columns as flat
-    primitive lists -> pyarrow arrays in one pass (attrs as a MapArray
-    from flat key/value child arrays + offsets), and replicates the id
-    columns with a C++-side take() gather -- no per-node Python dicts, no
-    pandas object columns (round-3 verdict wrong #2: a 50 KB page explodes
-    to ~10^3 nodes; building each as a dict dominated the stage).
-    engine="pandas" keeps the round-2 path as the value-parity baseline
-    (tests/test_spark_pipeline_edge.py::test_nodes_of_engines_identical)."""
-    if engine not in ("arrow", "pandas"):
-        raise ValueError(f"engine must be 'arrow' or 'pandas', got {engine!r}")
-    id_fields = ", ".join(f"{n} {t}" for n, t in df.dtypes if n in id_cols)
-    schema = (id_fields + ", node_id int, parent_id int, depth int, "
-              "name string, attrs map<string,string>, text string")
-    cols = list(id_cols) + ["html"]
-
-    if engine == "arrow":
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
-
-        ids = [name for name, _ in df.dtypes if name in id_cols]
-        arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
-        i32 = pa.int32()
-
-        def afn(batches):
-            dtd = load_dtd()
-            for batch in batches:
-                htmls = batch.column("html").to_pylist()
-                row_idx = []          # input-row index per output node row
-                node_id, parent_id, depth_c = [], [], []
-                name_c, text_c = [], []
-                at_off, at_k, at_v = [0], [], []
-                for idx in range(len(htmls)):
-                    try:
-                        text, _ = decode_html(bytes(htmls[idx]),
-                                              default_charset)
-                        doc = parse_html(dtd, text)
-                    except Exception:
-                        continue
-                    # renumber pre-order from the post-mortem root
-                    remap = {}
-                    for n, d in doc.walk():
-                        remap[n] = len(remap)
-                    for n, d in doc.walk():
-                        row_idx.append(idx)
-                        node_id.append(remap[n])
-                        p = doc.parent[n]
-                        parent_id.append(remap.get(p, -1))
-                        depth_c.append(d)
-                        name_c.append(doc.name[n])
-                        # dict round-trip dedups repeated attr names (last
-                        # wins) -- matches the pandas path and Spark's
-                        # map-key uniqueness requirement
-                        ad = dict(doc.attrs[n]) if doc.attrs[n] else {}
-                        at_k.extend(ad.keys())
-                        at_v.extend(ad.values())
-                        at_off.append(len(at_k))
-                        text_c.append(doc.text[n])
-                take = pa.array(row_idx, i32)
-                out = pa.RecordBatch.from_arrays(
-                    [batch.column(c).take(take) for c in ids] + [
-                        pa.array(node_id, i32), pa.array(parent_id, i32),
-                        pa.array(depth_c, i32),
-                        pa.array(name_c, pa.string()),
-                        pa.MapArray.from_arrays(
-                            pa.array(at_off, i32),
-                            pa.array(at_k, pa.string()),
-                            pa.array(at_v, pa.string())),
-                        pa.array(text_c, pa.string())],
-                    names=arrow_schema.names)
-                yield out.cast(arrow_schema, safe=False)
-
-        return df.select(*cols).mapInArrow(afn, schema)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dtd = load_dtd()
-        for pdf in batches:
-            rows = {c: [] for c in cols[:-1]}
-            node_id, parent_id, depth_c, name_c, attrs_c, text_c = \
-                [], [], [], [], [], []
-            for idx in range(len(pdf)):
-                raw = pdf["html"].iloc[idx]
-                try:
-                    text, _ = decode_html(bytes(raw), default_charset)
-                    doc = parse_html(dtd, text)
-                except Exception:
-                    continue
-                # renumber pre-order from the post-mortem root
-                remap = {}
-                for n, d in doc.walk():
-                    remap[n] = len(remap)
-                for n, d in doc.walk():
-                    for c in id_cols:
-                        rows[c].append(pdf[c].iloc[idx])
-                    node_id.append(remap[n])
-                    p = doc.parent[n]
-                    parent_id.append(remap.get(p, -1))
-                    depth_c.append(d)
-                    name_c.append(doc.name[n])
-                    attrs_c.append(dict(doc.attrs[n]) if doc.attrs[n] else {})
-                    text_c.append(doc.text[n])
-            rows.update(node_id=node_id, parent_id=parent_id, depth=depth_c,
-                        name=name_c, attrs=attrs_c, text=text_c)
-            yield pd.DataFrame(rows)
-
-    return df.select(*cols).mapInPandas(fn, schema)
+    Node ids are the pre-order rank from the post-mortem root (the root's
+    parent_id is -1); attrs is a map (repeated names: last wins); an
+    unparseable page contributes zero rows."""
+    return _parse_stage(
+        df, id_cols, "node_id int, parent_id int, depth int, name string, "
+        "attrs map<string,string>, text string", _node_rows)
 
 
-def with_url_bucket(df: DataFrame, num_buckets: int = 1024) -> DataFrame:
-    """Stable bucket id from xxhash64(url) -- the bucket-by-url partitioning
-    key used for Iceberg-style layout, lineage and resumable runs."""
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(num_buckets)).cast("int"))
+def _token_rows(dtd, text, cs, oversize):
+    rows = []
+    for pos, tok in enumerate(Tokenizer(text, dtd.entities).tokens()):
+        kind = tok[0]
+        if kind in ("start", "empty"):
+            # dict round-trip dedups repeated attr names (last wins);
+            # a bare attribute maps to ""
+            ad = {(a[0] if isinstance(a, tuple) else a):
+                  (a[1] if isinstance(a, tuple) else "") for a in tok[2]}
+            rows.append((pos, kind, tok[1], ad, None))
+        elif kind == "end":
+            rows.append((pos, kind, tok[1], {}, None))
+        elif kind == "eof":
+            rows.append((pos, kind, None, {}, None))
+        else:  # pcdata/comment/define/pi
+            rows.append((pos, kind, None, {}, tok[1]))
+    return rows
 
 
-def tokens_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
-              default_charset: str = "utf-8",
-              engine: str = "arrow") -> DataFrame:
+def tokens_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",)
+              ) -> DataFrame:
     """Exploded `tokens` table (FIXTURES.md §2): the raw lexer output, one
     row per token -- the debugging/inspection surface for the tokenizer.
-
-    engine="arrow" (default) uses the same flat-array + MapArray + take()
-    assembly as nodes_of (no per-token Python dicts); engine="pandas"
-    keeps the original path as the value-parity baseline."""
-    from ..parser.tokenizer import Tokenizer
-    if engine not in ("arrow", "pandas"):
-        raise ValueError(f"engine must be 'arrow' or 'pandas', got {engine!r}")
-    id_fields = ", ".join(f"{n} {t}" for n, t in df.dtypes if n in id_cols)
-    schema = (id_fields + ", pos int, kind string, name string, "
-              "attrs map<string,string>, text string")
-    cols = list(id_cols) + ["html"]
-
-    if engine == "arrow":
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
-
-        ids = [name for name, _ in df.dtypes if name in id_cols]
-        arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
-        i32 = pa.int32()
-
-        def afn(batches):
-            dtd = load_dtd()
-            for batch in batches:
-                htmls = batch.column("html").to_pylist()
-                row_idx = []
-                pos_c, kind_c, name_c, text_c = [], [], [], []
-                at_off, at_k, at_v = [0], [], []
-                for idx in range(len(htmls)):
-                    try:
-                        text, _ = decode_html(bytes(htmls[idx]),
-                                              default_charset)
-                        toks = list(Tokenizer(text, dtd.entities).tokens())
-                    except Exception:
-                        continue
-                    for pos, tok in enumerate(toks):
-                        row_idx.append(idx)
-                        pos_c.append(pos)
-                        kind = tok[0]
-                        kind_c.append(kind)
-                        if kind in ("start", "empty"):
-                            name_c.append(tok[1])
-                            # dict round-trip dedups repeated attr names
-                            # (last wins), matching the pandas path and
-                            # Spark's map-key uniqueness requirement
-                            ad = {(a[0] if isinstance(a, tuple) else a):
-                                  (a[1] if isinstance(a, tuple) else "")
-                                  for a in tok[2]}
-                            at_k.extend(ad.keys())
-                            at_v.extend(ad.values())
-                            text_c.append(None)
-                        elif kind == "end":
-                            name_c.append(tok[1])
-                            text_c.append(None)
-                        elif kind == "eof":
-                            name_c.append(None)
-                            text_c.append(None)
-                        else:  # pcdata/comment/define/pi
-                            name_c.append(None)
-                            text_c.append(tok[1])
-                        at_off.append(len(at_k))
-                take = pa.array(row_idx, i32)
-                out = pa.RecordBatch.from_arrays(
-                    [batch.column(c).take(take) for c in ids] + [
-                        pa.array(pos_c, i32),
-                        pa.array(kind_c, pa.string()),
-                        pa.array(name_c, pa.string()),
-                        pa.MapArray.from_arrays(
-                            pa.array(at_off, i32),
-                            pa.array(at_k, pa.string()),
-                            pa.array(at_v, pa.string())),
-                        pa.array(text_c, pa.string())],
-                    names=arrow_schema.names)
-                yield out.cast(arrow_schema, safe=False)
-
-        return df.select(*cols).mapInArrow(afn, schema)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dtd = load_dtd()
-        for pdf in batches:
-            rows = {c: [] for c in cols[:-1]}
-            pos_c, kind_c, name_c, attrs_c, text_c = [], [], [], [], []
-            for idx in range(len(pdf)):
-                try:
-                    text, _ = decode_html(bytes(pdf["html"].iloc[idx]),
-                                          default_charset)
-                    tk = Tokenizer(text, dtd.entities)
-                    toks = list(tk.tokens())
-                except Exception:
-                    continue
-                for pos, tok in enumerate(toks):
-                    for c in id_cols:
-                        rows[c].append(pdf[c].iloc[idx])
-                    pos_c.append(pos)
-                    kind = tok[0]
-                    kind_c.append(kind)
-                    if kind in ("start", "empty"):
-                        name_c.append(tok[1])
-                        attrs_c.append(
-                            {(a[0] if isinstance(a, tuple) else a):
-                             (a[1] if isinstance(a, tuple) else "")
-                             for a in tok[2]})
-                        text_c.append(None)
-                    elif kind == "end":
-                        name_c.append(tok[1])
-                        attrs_c.append({})
-                        text_c.append(None)
-                    elif kind == "eof":
-                        name_c.append(None)
-                        attrs_c.append({})
-                        text_c.append(None)
-                    else:  # pcdata/comment/define/pi
-                        name_c.append(None)
-                        attrs_c.append({})
-                        text_c.append(tok[1])
-            rows.update(pos=pos_c, kind=kind_c, name=name_c, attrs=attrs_c,
-                        text=text_c)
-            yield pd.DataFrame(rows)
-
-    return df.select(*cols).mapInPandas(fn, schema)
+    Attribute names are pre-normalization (as written)."""
+    return _parse_stage(
+        df, id_cols, "pos int, kind string, name string, "
+        "attrs map<string,string>, text string", _token_rows)
 
 
-def bookmarks_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
-                 default_charset: str = "utf-8") -> DataFrame:
+def _bookmark_rows(dtd, text, cs, oversize):
+    doc = sgml_parse(dtd, text)
+
+    def text_of(n):
+        return "".join(doc.text[c] or "" for c in doc.children[n]
+                       if doc.name[c] == PCDATA)
+
+    # folder = concatenated H3 headings on the DL ancestor path
+    rows = []
+    stack = [(doc.root, "")]
+    while stack:
+        n, folder = stack.pop()
+        nm = doc.name[n]
+        if nm == "A":
+            href = next((v for k, v in (doc.attrs[n] or ()) if k == "HREF"),
+                        None)
+            rows.append((folder, text_of(n), href))
+            continue
+        if nm == "DT":
+            h3 = next((c for c in doc.children[n] if doc.name[c] == "H3"), -1)
+            if h3 >= 0:
+                folder = (folder + "/" + text_of(h3)).lstrip("/")
+        for c in reversed(doc.children[n]):
+            stack.append((c, folder))
+    return rows
+
+
+def bookmarks_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",)
+                 ) -> DataFrame:
     """Parse NETSCAPE-Bookmark-file-1 payloads (the reference's second
     catalog DTD) into (folder_path, link_title, href) rows -- demonstrates
     the multi-DTD parse surface (`sgml-parse dtd input`)."""
-    id_fields = ", ".join(f"{n} {t}" for n, t in df.dtypes if n in id_cols)
-    schema = id_fields + ", folder string, link_title string, href string"
-    cols = list(id_cols) + ["html"]
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..dtd import PCDATA
-        from ..parser.pda import sgml_parse
-        dtd = load_dtd("netscape-bookmark")
-        for pdf in batches:
-            rows = {c: [] for c in cols[:-1]}
-            folder_c, title_c, href_c = [], [], []
-            for idx in range(len(pdf)):
-                try:
-                    text, _ = decode_html(bytes(pdf["html"].iloc[idx]),
-                                          default_charset)
-                    doc = sgml_parse(dtd, text)
-                except Exception:
-                    continue
-                # folder = concatenated H3 headings on the DL ancestor path
-                def text_of(n):
-                    return "".join(doc.text[c] or "" for c in doc.children[n]
-                                   if doc.name[c] == PCDATA)
-                stack = [(doc.root, "")]
-                while stack:
-                    n, folder = stack.pop()
-                    nm = doc.name[n]
-                    if nm == "A":
-                        href = next((v for k, v in (doc.attrs[n] or ())
-                                     if k == "HREF"), None)
-                        for c in id_cols:
-                            rows[c].append(pdf[c].iloc[idx])
-                        folder_c.append(folder)
-                        title_c.append(text_of(n))
-                        href_c.append(href)
-                        continue
-                    if nm == "DT":
-                        h3 = next((c for c in doc.children[n]
-                                   if doc.name[c] == "H3"), -1)
-                        if h3 >= 0:
-                            folder = (folder + "/" + text_of(h3)).lstrip("/")
-                    for c in reversed(doc.children[n]):
-                        stack.append((c, folder))
-            rows.update(folder=folder_c, link_title=title_c, href=href_c)
-            yield pd.DataFrame(rows)
-
-    return df.select(*cols).mapInPandas(fn, schema)
+    return _parse_stage(
+        df, id_cols, "folder string, link_title string, href string",
+        _bookmark_rows, dtd_name="netscape-bookmark")
 
 
 # --- structured extraction stages (round 7) ----------------------------------
 
-def tables_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
-              default_charset: str = "utf-8") -> DataFrame:
+def tables_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",)
+              ) -> DataFrame:
     """Exploded `cells` table: one row per TD/TH of every <table> in the
-    repaired DOM -- (table_idx, row_idx, col_idx, tag, cell).  Same
-    shuffle-free mapInArrow shape as nodes_of: flat primitive lists ->
-    pyarrow arrays, id columns replicated by a C++-side take(); a
-    malformed document contributes zero rows rather than killing the
-    batch (the extract_pages never-kill-the-batch convention)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
-    from ..extract import tables_of_doc
-
-    id_fields = ", ".join(f"{n} {t}" for n, t in df.dtypes if n in id_cols)
-    schema = (id_fields + ", table_idx int, row_idx int, col_idx int, "
-              "tag string, cell string")
-    ids = [name for name, _ in df.dtypes if name in id_cols]
-    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
-    i32 = pa.int32()
-
-    def afn(batches):
-        dtd = load_dtd()
-        for batch in batches:
-            htmls = batch.column("html").to_pylist()
-            row_idx = []
-            t_c, r_c, c_c, tag_c, cell_c = [], [], [], [], []
-            for idx in range(len(htmls)):
-                try:
-                    text, _ = decode_html(bytes(htmls[idx]), default_charset)
-                    doc = parse_html(dtd, text)
-                    rows = tables_of_doc(doc)
-                except Exception:
-                    continue
-                for (t, r, c, tag, cell) in rows:
-                    row_idx.append(idx)
-                    t_c.append(t)
-                    r_c.append(r)
-                    c_c.append(c)
-                    tag_c.append(tag)
-                    cell_c.append(cell)
-            take = pa.array(row_idx, i32)
-            out = pa.RecordBatch.from_arrays(
-                [batch.column(c).take(take) for c in ids] + [
-                    pa.array(t_c, i32), pa.array(r_c, i32),
-                    pa.array(c_c, i32),
-                    pa.array(tag_c, pa.string()),
-                    pa.array(cell_c, pa.string())],
-                names=arrow_schema.names)
-            yield out.cast(arrow_schema, safe=False)
-
-    return df.select(*(list(id_cols) + ["html"])).mapInArrow(afn, schema)
+    repaired DOM -- (table_idx, row_idx, col_idx, tag, cell); a malformed
+    document contributes zero rows rather than killing the batch."""
+    return _parse_stage(
+        df, id_cols, "table_idx int, row_idx int, col_idx int, tag string, "
+        "cell string",
+        lambda dtd, text, cs, oversize: tables_of_doc(parse_html(dtd, text)))
 
 
 _META_FIELDS = ("title", "description", "og_title", "canonical", "h1")
 
 
-def metadata_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
-                default_charset: str = "utf-8") -> DataFrame:
+def metadata_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",)
+                ) -> DataFrame:
     """Per-page head metadata (title / meta description / og:title /
     canonical link / first h1): exactly one output row per input page
     (a malformed document yields the all-'' row, so ingest accounting
-    stays 1:1), assembled as flat string arrays in one mapInArrow pass."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
+    stays 1:1)."""
+    def doc_fn(dtd, text, cs, oversize):
+        md = metadata_of_doc(parse_html(dtd, text))
+        return tuple(md[f] for f in _META_FIELDS)
 
-    from ..extract import metadata_of_doc
-
-    id_fields = ", ".join(f"{n} {t}" for n, t in df.dtypes if n in id_cols)
-    schema = id_fields + ", " + ", ".join(f"{f} string"
-                                          for f in _META_FIELDS)
-    ids = [name for name, _ in df.dtypes if name in id_cols]
-    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
-
-    def afn(batches):
-        dtd = load_dtd()
-        empty = {f: "" for f in _META_FIELDS}
-        for batch in batches:
-            htmls = batch.column("html").to_pylist()
-            cols = {f: [] for f in _META_FIELDS}
-            for idx in range(len(htmls)):
-                try:
-                    text, _ = decode_html(bytes(htmls[idx]), default_charset)
-                    md = metadata_of_doc(parse_html(dtd, text))
-                except Exception:
-                    md = empty
-                for f in _META_FIELDS:
-                    cols[f].append(md[f])
-            out = pa.RecordBatch.from_arrays(
-                [batch.column(c) for c in ids] + [
-                    pa.array(cols[f], pa.string()) for f in _META_FIELDS],
-                names=arrow_schema.names)
-            yield out.cast(arrow_schema, safe=False)
-
-    return df.select(*(list(id_cols) + ["html"])).mapInArrow(afn, schema)
+    return _parse_stage(
+        df, id_cols, ", ".join(f"{f} string" for f in _META_FIELDS),
+        doc_fn, lambda exc: ("",) * len(_META_FIELDS))
 
 
-def jsonld_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
-              default_charset: str = "utf-8") -> DataFrame:
+def jsonld_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",)
+              ) -> DataFrame:
     """One row per <script type=application/ld+json> block: (ld_idx,
     json) with the payload verbatim.  Schema-aware parsing stays JVM-side
     -- compose with F.from_json, never a Python json.loads stage."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
-    from ..extract import jsonld_of_doc
-
-    id_fields = ", ".join(f"{n} {t}" for n, t in df.dtypes if n in id_cols)
-    schema = id_fields + ", ld_idx int, json string"
-    ids = [name for name, _ in df.dtypes if name in id_cols]
-    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
-    i32 = pa.int32()
-
-    def afn(batches):
-        dtd = load_dtd()
-        for batch in batches:
-            htmls = batch.column("html").to_pylist()
-            row_idx, idx_c, json_c = [], [], []
-            for idx in range(len(htmls)):
-                try:
-                    text, _ = decode_html(bytes(htmls[idx]), default_charset)
-                    payloads = jsonld_of_doc(parse_html(dtd, text))
-                except Exception:
-                    continue
-                for i, payload in enumerate(payloads):
-                    row_idx.append(idx)
-                    idx_c.append(i)
-                    json_c.append(payload)
-            take = pa.array(row_idx, i32)
-            out = pa.RecordBatch.from_arrays(
-                [batch.column(c).take(take) for c in ids] + [
-                    pa.array(idx_c, i32), pa.array(json_c, pa.string())],
-                names=arrow_schema.names)
-            yield out.cast(arrow_schema, safe=False)
-
-    return df.select(*(list(id_cols) + ["html"])).mapInArrow(afn, schema)
+    return _parse_stage(
+        df, id_cols, "ld_idx int, json string",
+        lambda dtd, text, cs, oversize:
+            list(enumerate(jsonld_of_doc(parse_html(dtd, text)))))

@@ -24,10 +24,11 @@ def test_anchors_parallel_to_links(spark):
                       columns=("links", "anchors")).collect()[0]
     assert list(r.links) == ["/", "/about", "/e"]
     assert list(r.anchors) == ["home", "about", ""]
-    p = extract_pages(df, engine="pandas") \
+    # the same arrays when the span scorer and base walk also run
+    full = extract_pages(df, columns=("title", "links", "anchors", "base")) \
         .select("links", "anchors").collect()[0]
-    assert list(p.links) == list(r.links)
-    assert list(p.anchors) == list(r.anchors)
+    assert (list(full.links), list(full.anchors)) == \
+        (["/", "/about", "/e"], ["home", "about", ""])
 
 
 def test_anchor_text_plan(spark):

@@ -1,6 +1,6 @@
 """Physical-plan audits: the optimizations we rely on at 100 TB must be
 visible in the plan, not assumed -- predicate pushdown into the parquet
-scan, column pruning through the mapInPandas stage, broadcast joins for
+scan, column pruning through the mapInArrow stage, broadcast joins for
 small dimensions, partial (map-side) aggregation."""
 
 import pytest
@@ -65,7 +65,7 @@ def test_ann_broadcasts_query_side(spark):
 
 def test_no_python_udf_in_relational_queries(spark):
     """Every relational/training-data query must stay JVM-side; Python
-    appears only in the dedicated mapInPandas pipeline stages."""
+    appears only in the dedicated mapInArrow pipeline stages."""
     for name, fn in [
         ("pricing", R.q_pricing_summary), ("revenue", R.q_top_revenue_nations),
         ("window", R.q_window_user_events), ("sessionize", R.q_sessionize),
