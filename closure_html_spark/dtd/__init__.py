@@ -59,7 +59,7 @@ class Dtd:
         # pair per context element; persists for the worker's lifetime
         self.pda_actions = {}
         # raw tag text -> (normalized token | None, warns tuple) memo used
-        # by normalize.tokenize_normalized; size-bounded there
+        # by pda.sgml_parse; size-bounded there (65,536 entries)
         self.tag_cache = {}
         # raw entity-bearing pcdata gap -> (token, warns tuple) memo
         # (boilerplate gaps like ' &amp; ' repeat across a corpus);

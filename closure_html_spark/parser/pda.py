@@ -28,13 +28,11 @@ from .normalize import (
     build_start_hit,
     mungle_attlist,
     normalized_tokens,
-    tokenize_normalized,
 )
 from .tokenizer import (
     _FAST_END_TAG,
     _FAST_START_TAG,
     _SPECIAL,
-    FastTokenizer,
     Tokenizer,
     decode_pcdata_fast,
 )
@@ -47,7 +45,7 @@ class Doc:
     """Array-encoded DOM for one document."""
 
     __slots__ = ("name", "attrs", "text", "parent", "children", "root",
-                 "warnings", "markers")
+                 "warnings")
 
     def __init__(self):
         self.name: list[str] = []
@@ -57,10 +55,6 @@ class Doc:
         self.children: list[list[int]] = []
         self.root = 0
         self.warnings: list[tuple[int, str]] = []
-        # nid -> "S"|"E" for HSTAG/HETAG marker nodes (font_htag mode only;
-        # hstag-node/hetag-node, sgml-parse.lisp:165-167); all removed by
-        # post_mortem_fix_font before any consumer sees the tree
-        self.markers: dict[int, str] = {}
 
     def add(self, name, attrs, text, parent) -> int:
         nid = len(self.name)
@@ -151,34 +145,24 @@ def _build_ctx_actions(dtd: Dtd, ctx: str):
 _EMPTY_MAP: dict = {}
 
 
-def sgml_parse(dtd: Dtd, text: str, tokenizer: Tokenizer | None = None,
-               font_htag: bool = False) -> Doc:
+def sgml_parse(dtd: Dtd, text: str) -> Doc:
     """Parse decoded text into a Doc rooted at a synthetic top node.
 
-    With an explicit tokenizer this runs the direct transcription of the
-    reference loop (_sgml_parse_ref); the default path runs the fused
-    action-table engine, which the differential fuzz pins token- and
-    serialization-identical to the reference loop.
-
-    font_htag=True enables the reference's FONT-as-marker mode: FONT tags
-    bypass the PDA and land in the tree as HSTAG/HETAG marker nodes
-    (transition :1130-1134) for post_mortem_fix_font to pair and wrap.
-    The reference can never reach this path: tag-as-marker-p
-    (sgml-parse.lisp:1174-1178) discards its first `and` form, so the
-    default flags make it constantly nil -- this flag is the fixed,
-    opt-in variant SURVEY §7 promised."""
-    if tokenizer is not None:
-        return _sgml_parse_ref(dtd, text, tokenizer, font_htag)
-
-    # Fully fused single loop: tokenize + normalize + PDA.  Tokens are
-    # produced on demand (no intermediate token list); tag tokens come out
-    # of the per-DTD whole-tag memo, unusual syntax drops into the exact
-    # char machine one token at a time.  The differential fuzz pins this
-    # engine token- and serialization-identical to _sgml_parse_ref.
+    The parser's one fast path: a fused single loop of tokenize +
+    normalize + PDA.  Tokens are produced on demand (no intermediate token
+    list); well-formed tags match one fast regex and come out of the
+    per-DTD whole-tag memo (dtd.tag_cache, capped at 65,536 entries),
+    unusual syntax drops into the exact char machine one token at a time,
+    and transitions are one dict hit in per-context action tables.  The
+    differential fuzz (tests/test_tokenizer_fuzz.py) pins it
+    serialization- and warning-identical to _sgml_parse_ref."""
     tk = Tokenizer(text, dtd.entities)
     src = text
     n = len(src)
     i = 0
+    # Whole-tag memo: tag vocab repeats heavily across a corpus, and the
+    # cap keeps unique-attribute floods (hrefs) from growing it without
+    # bound.  Memoized tokens and attr lists are shared: never mutate them.
     cache = dtd.tag_cache
     cache_get = cache.get
     pcache = dtd.pcdata_cache
@@ -345,20 +329,6 @@ def sgml_parse(dtd: Dtd, text: str, tokenizer: Tokenizer | None = None,
             if see is _DONE:
                 break
         kind = see[0]
-        if font_htag and see[1] == "FONT" and kind != "C":
-            # tag-as-marker: consume as an HSTAG/HETAG marker child of the
-            # current node, no stack change (transition :1130-1134 +
-            # :htag emission :1087-1104)
-            nid = nn
-            nn += 1
-            d_name.append("FONT")
-            d_attrs.append(see[2] if kind == "S" else None)
-            d_text.append(None)
-            d_parent.append(s)
-            d_children.append([])
-            d_children[s].append(nid)
-            doc.markers[nid] = kind
-            continue
         if kind == "S":
             act = smap.get(see[1])
         elif kind == "E":
@@ -467,10 +437,10 @@ def sgml_parse(dtd: Dtd, text: str, tokenizer: Tokenizer | None = None,
     return doc
 
 
-def _sgml_parse_ref(dtd: Dtd, text: str, tokenizer: Tokenizer,
-                    font_htag: bool = False) -> Doc:
+def _sgml_parse_ref(dtd: Dtd, text: str, tokenizer: Tokenizer) -> Doc:
     """Direct transcription of the reference main loop (sgml-parse.lisp:
-    1025-1106); kept as the differential-testing twin of the fused engine."""
+    1025-1106) over normalized_tokens of the exact char machine; the only
+    reference twin of sgml_parse, run by the differential tests."""
     toks = list(normalized_tokens(tokenizer, dtd))
     tk = tokenizer
     n_toks = len(toks)
@@ -526,19 +496,6 @@ def _sgml_parse_ref(dtd: Dtd, text: str, tokenizer: Tokenizer,
                 d_parent.append(s)
                 d_children.append([])
                 d_children[s].append(nid)
-            continue
-        if font_htag and see[1] == "FONT":
-            # tag-as-marker (transition :1130-1134): HSTAG/HETAG marker
-            # node appended to the current node, no stack change
-            del ein[0]
-            nid = len(d_name)
-            d_name.append("FONT")
-            d_attrs.append(see[2] if kind == "S" else None)
-            d_text.append(None)
-            d_parent.append(s)
-            d_children.append([])
-            d_children[s].append(nid)
-            doc.markers[nid] = kind
             continue
         if kind == "E" and top is not None and top[1] == see[1]:
             stack.pop()
@@ -729,158 +686,6 @@ def post_mortem_fix_top_level(doc: Doc) -> int:
     return html
 
 
-# ---------------------------------------------------------------------------
-# FONT post-mortem (opt-in font_htag mode; sgml-parse.lisp:1398-1556,
-# 1665-1690).  Unreachable in the reference itself (tag-as-marker-p bug);
-# this is the fixed variant behind a flag.
-
-def _pt_path(doc: Doc, nid: int) -> list[int] | None:
-    """Child-index path from doc.root to nid (pt-path equivalent)."""
-    path = []
-    while nid != doc.root:
-        p = doc.parent[nid]
-        if p < 0:
-            return None
-        path.append(doc.children[p].index(nid))
-        nid = p
-    path.reverse()
-    return path
-
-
-def _pt_access(doc: Doc, path: list[int]) -> int:
-    nid = doc.root
-    for i in path:
-        nid = doc.children[nid][i]
-    return nid
-
-
-def _remove_pt(doc: Doc, nid: int):
-    p = doc.parent[nid]
-    if p >= 0:
-        doc.children[p].remove(nid)
-    doc.parent[nid] = -1
-
-
-def map_htag_pairs(doc: Doc, continuation, gi: str = "FONT"):
-    """Pre-order pairing of HSTAG/HETAG markers, inner pairs first
-    (map-htag-pairs, sgml-parse.lisp:1558-1586).  Iterative with an
-    explicit stack (round-6 verdict #5: the recursive form unified with
-    Doc.walk's iterative idiom -- a 1000+-deep repaired tree must not
-    hit the Python recursion limit in font_htag mode); like the
-    recursive original, a node's children are snapshotted before any
-    continuation mutation can reparent them, and marker nodes are not
-    descended into."""
-    stack: list[int] = []
-    markers = doc.markers
-    todo: list[int] = [doc.root]
-    while todo:
-        x = todo.pop()
-        m = markers.get(x)
-        if m == "S" and doc.name[x] == gi:
-            stack.append(x)
-        elif m == "E" and doc.name[x] == gi:
-            if not stack:
-                _remove_pt(doc, x)
-                doc.warnings.append((4, f"Superfluous {gi} end tag."))
-            else:
-                continuation(stack.pop(), x)
-        else:
-            todo.extend(reversed(doc.children[x]))
-    if stack:
-        doc.warnings.append((4, f"Unclosed {gi} elements."))
-        new = []
-        for _ in stack:
-            nid = doc.add(gi, None, None, doc.root)
-            doc.markers[nid] = "E"
-            new.append(nid)
-        for stag, etag in zip(stack, new):
-            continuation(stag, etag)
-
-
-_MUNGLE_MAX_DEPTH = 200
-
-
-def mungle_font_pair(dtd: Dtd, doc: Doc, tag: int, s, e, depth: int = 0):
-    """Path-based wrap algorithm (mungle-font-pair, sgml-parse.lisp:1493-
-    1556), ported quirk-for-quirk: the prefix-equality guards on the
-    unequal-length branches are QUOTED in the reference (always true), so
-    those branches fire on length alone; we keep that behavior."""
-    if depth > _MUNGLE_MAX_DEPTH:
-        raise RecursionError("mungle-font-pair runaway")
-    if s == e:
-        return
-    if len(s) == len(e) and s[:-1] == e[:-1]:
-        if s[-1] > e[-1]:
-            # inverted span (possible after earlier mungles shift indices):
-            # the reference's before/after slicing would duplicate nodes
-            # here; treat as spanning nothing instead
-            return
-        p = _pt_access(doc, s[:-1])
-        pinc = dtd.include.get(doc.name[p])
-        span = range(s[-1], e[-1])
-        ok = pinc is not None and "FONT" in pinc
-        if ok:
-            finc = dtd.include["FONT"]
-            for j in span:
-                cname = doc.name[doc.children[p][j]]
-                if cname not in finc:
-                    ok = False
-                    break
-        if ok:
-            kids = doc.children[p]
-            between = kids[s[-1]:e[-1]]
-            # doc.add with parent -1 skips the child-link auto-append;
-            # parent/children are wired manually below
-            new = doc.add("FONT", doc.attrs[tag], None, -1)
-            doc.parent[new] = p
-            doc.children[new] = between
-            doc.children[p] = kids[:s[-1]] + [new] + kids[e[-1]:]
-            for k in between:
-                doc.parent[k] = new
-        else:
-            for i in span:
-                child = doc.children[p][i]
-                mungle_font_pair(
-                    dtd, doc, tag,
-                    s[:-1] + [i, 0],
-                    s[:-1] + [i, len(doc.children[child])], depth + 1)
-        return
-    if len(s) < len(e):
-        v = e[:len(s)]
-        mungle_font_pair(dtd, doc, tag, v + [0], e, depth + 1)
-        mungle_font_pair(dtd, doc, tag, s, v, depth + 1)
-        return
-    if len(s) > len(e):
-        v = s[:len(e)]
-        mungle_font_pair(dtd, doc, tag, v[:-1] + [v[-1] + 1], e, depth + 1)
-        m = len(doc.children[_pt_access(doc, v)])
-        mungle_font_pair(dtd, doc, tag, s, v + [m], depth + 1)
-        return
-    # equal length, different interior: split at first divergence (:1541-1553)
-    i = 0
-    while i < len(s) and i < len(e) and s[i] == e[i]:
-        i += 1
-    v1 = s[:i] + [s[i] + 1]
-    mungle_font_pair(dtd, doc, tag, s, v1, depth + 1)
-    mungle_font_pair(dtd, doc, tag, v1, e, depth + 1)
-
-
-def post_mortem_fix_font(doc: Doc, dtd: Dtd) -> Doc:
-    """Pair every HSTAG/HETAG FONT marker and wrap the spanned content in
-    real FONT elements (post-mortem/fix-font, sgml-parse.lisp:1665-1690)."""
-    pairs: list[tuple[int, int]] = []
-    map_htag_pairs(doc, lambda st, et: pairs.append((st, et)), "FONT")
-    for stag, etag in pairs:
-        s = _pt_path(doc, stag)
-        _remove_pt(doc, stag)
-        e = _pt_path(doc, etag)
-        _remove_pt(doc, etag)
-        if s is not None and e is not None:
-            mungle_font_pair(dtd, doc, stag, s, e)
-    doc.markers.clear()
-    return doc
-
-
 def check_saneness(doc: Doc, dtd: Dtd) -> list[str]:
     """Runnable port of check-saneness (sgml-parse.lisp:1630-1638): walk the
     tree and report (a) children not allowed by the parent's DTD inclusion
@@ -902,14 +707,11 @@ def check_saneness(doc: Doc, dtd: Dtd) -> list[str]:
     return out
 
 
-def parse_html(dtd: Dtd, text: str, font_htag: bool = False) -> Doc:
+def parse_html(dtd: Dtd, text: str) -> Doc:
     """Full parse: PDA + post-mortem (post-mortem-heuristic order,
-    sgml-parse.lisp:1326-1331: fix-font first when enabled, then
-    fix-top-level).  font_htag=False matches the reference's observable
-    default behavior, where the tag-as-marker-p bug makes the FONT HTAG
-    machinery unreachable; font_htag=True opts into the fixed variant."""
-    doc = sgml_parse(dtd, text, font_htag=font_htag)
-    if font_htag:
-        post_mortem_fix_font(doc, dtd)
+    sgml-parse.lisp:1326-1331).  Only fix-top-level runs: the reference's
+    fix-font pass has no markers to pair, because the tag-as-marker-p bug
+    keeps FONT on the normal PDA + heuristic path (module docstring)."""
+    doc = sgml_parse(dtd, text)
     post_mortem_fix_top_level(doc)
     return doc

@@ -420,12 +420,13 @@ class Tokenizer:
 
 
 # ---------------------------------------------------------------------------
-# Fast path: match a whole well-formed tag with ONE compiled regex and fall
-# back to the exact char machine above for anything unusual.  The fast
-# patterns are deliberately narrower than the grammar (no '&' or quotes in
-# names/unquoted values, no '&' inside quoted literals, whitespace between
-# attributes) so every fast match produces byte-identical tokens to the
-# slow path; non-matches fall through.
+# Fast path of the fused parse loop (pda.sgml_parse, with the attribute
+# pass in normalize.build_start_hit): match a whole well-formed tag with ONE
+# compiled regex and fall back to the exact char machine above for anything
+# unusual.  The fast patterns are deliberately narrower than the grammar
+# (no '&' or quotes in names/unquoted values, no '&' inside quoted literals,
+# whitespace between attributes) so every fast match produces the same
+# tokens as the slow path; non-matches fall through.
 
 # _FWS matches exactly the slow machine's whitespace set (WHITESPACE above);
 # `\s` would also match Unicode spaces (NBSP,  ...) and make the fast
@@ -447,47 +448,3 @@ _FAST_START_TAG = re.compile(
 _FAST_ATTR = re.compile(
     _FWS + r"""*([A-Za-z0-9.:\-%~#_+?!@();,\[\]][A-Za-z0-9.:\-%/~#_+?!@();,\[\]]*)"""
     r"""(?:""" + _FWS + r"""*=""" + _FWS + r"""*("[^"&]*"|'[^'&]*'|[A-Za-z0-9.:\-%/~#_+?!@();,\[\]][A-Za-z0-9.:\-%/~#_+?!@();,\[\]=]*))?""")
-
-
-def _fast_atts(raw: str) -> list:
-    if not raw:
-        return []
-    atts = []
-    for m in _FAST_ATTR.finditer(raw):
-        name, value = m.group(1), m.group(2)
-        if value is None:
-            atts.append(name)
-        elif value[0] in "\"'":
-            atts.append((name, value[1:-1]))
-        else:
-            atts.append((name, value))
-    return atts
-
-
-class FastTokenizer(Tokenizer):
-    """Tokenizer with the single-regex tag fast path."""
-
-    __slots__ = ()
-
-    def read_token(self):
-        s, i, n = self.s, self.i, self.n
-        if i >= n:
-            return ("eof",)
-        if s[i] != "<":
-            return self.read_pcdata()
-        j = i + 1
-        if j < n:
-            c = s[j]
-            if c == "/":
-                m = _FAST_END_TAG.match(s, j)
-                if m is not None:
-                    self.i = m.end()
-                    return ("end", m.group(1).upper())
-            elif c.isalpha() and c.isascii():
-                m = _FAST_START_TAG.match(s, j)
-                if m is not None:
-                    self.i = m.end()
-                    kind = "empty" if m.group(3) else "start"
-                    return (kind, m.group(1).upper(), _fast_atts(m.group(2)))
-        self.i = j
-        return self.read_tag()

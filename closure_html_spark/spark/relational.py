@@ -432,7 +432,7 @@ ORDER BY a_id, b_id
 """
 
 
-def _dot_expr(a, b, dim: int = 64):
+def _dot_expr(a, b):
     """Dot product via zip_with/aggregate.  Round 3 unrolled this into 64
     element_at terms on the theory that HOF lambdas are interpreted while
     the unrolled sum stays in whole-stage codegen; an interleaved ABBA A/B
@@ -442,7 +442,7 @@ def _dot_expr(a, b, dim: int = 64):
     back to interpretation of a far bigger tree, while the HOF loop is a
     tight JVM array loop).  Reverted to the fold form; left-associated
     from 0.0 so the float result is bit-identical to DuckDB's
-    list_dot_product.  `dim` kept for signature stability (unused)."""
+    list_dot_product."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0), lambda acc, x: acc + x)
@@ -713,56 +713,42 @@ FROM ranked WHERE rnk <= 5 ORDER BY q_id, rnk
 """
 
 
-def _minhash_sigs(docs, n_hashes: int = 16, portable_hash: bool = True):
+def _minhash_sigs(docs, n_hashes: int = 16):
     """MinHash signatures (doc_id, h0..h{n-1}), fully JVM-side: exploded
     shingles -> n_hashes salted hashes per row -> map-side partial MIN
     (stays in whole-stage codegen end to end; HOF lambdas would not).
 
-    portable_hash=True derives the hashes from ONE md5 per shingle via
-    Carter-Wegman-style linear mixes of its two 32-bit halves (a*k1 +
-    b*k2 + h, all < 2^41 so no BIGINT overflow in either engine -- DuckDB
-    errors on overflow where Spark wraps), so DuckDB replays the
-    signatures bit-for-bit.  portable_hash=False swaps in xxhash64 --
-    cheaper per shingle, the knob to flip at 100 TB if hashing ever
-    dominates the profile."""
+    The hashes derive from ONE md5 per shingle via Carter-Wegman-style
+    linear mixes of its two 32-bit halves (a*k1 + b*k2 + h, all < 2^41 so
+    no BIGINT overflow in either engine -- DuckDB errors on overflow where
+    Spark wraps), so DuckDB replays the signatures bit-for-bit."""
     words = F.split(F.trim(F.col("text")), r"\s+")
     docs = docs.filter(F.size(words) >= 3)
-    if portable_hash:
-        md5 = F.md5(F.col("tri"))
-        a = F.conv(F.substring(md5, 1, 8), 16, 10).cast("long")
-        b = F.conv(F.substring(md5, 9, 8), 16, 10).cast("long")
+    md5 = F.md5(F.col("tri"))
+    a = F.conv(F.substring(md5, 1, 8), 16, 10).cast("long")
+    b = F.conv(F.substring(md5, 9, 8), 16, 10).cast("long")
 
-        def _h(h):
-            return (a * F.lit(2 * h + 3) + b * F.lit(2 * h + 101)
-                    + F.lit(h)).alias(f"x{h}")
-    else:
-        def _h(h):
-            return F.xxhash64("tri", F.lit(h)).alias(f"x{h}")
+    def _h(h):
+        return (a * F.lit(2 * h + 3) + b * F.lit(2 * h + 101)
+                + F.lit(h)).alias(f"x{h}")
     tri = _shingles(docs).select(
         "doc_id", *[_h(h) for h in range(n_hashes)])
     return tri.groupBy("doc_id").agg(
         *[F.min(f"x{h}").alias(f"h{h}") for h in range(n_hashes)])
 
 
-def _minhash_banded(sigs, n_hashes: int, n_bands: int,
-                    portable_hash: bool = True):
+def _minhash_banded(sigs, n_hashes: int, n_bands: int):
     """(doc_id, band, bucket) rows from a signature table -- one pass via
     posexplode of an array of (band, bucket) structs.  (A unionAll of
     per-band selects would re-execute the whole shingle+agg subplan once
     per band: Catalyst does not dedupe common subplans across union
     branches.)"""
     per_band = n_hashes // n_bands
-    if portable_hash:
-        def _bucket(b):
-            return F.md5(F.concat_ws(",", *[
-                F.col(f"h{h}")
-                for h in range(b * per_band, (b + 1) * per_band)]))
-    else:
-        def _bucket(b):
-            return F.xxhash64(*[
-                F.col(f"h{h}")
-                for h in range(b * per_band, (b + 1) * per_band)]
-            ).cast("string")
+
+    def _bucket(b):
+        return F.md5(F.concat_ws(",", *[
+            F.col(f"h{h}")
+            for h in range(b * per_band, (b + 1) * per_band)]))
     band_structs = F.array(*[
         F.struct(F.lit(b).cast("int").alias("band"),
                  _bucket(b).alias("bucket"))
@@ -773,15 +759,14 @@ def _minhash_banded(sigs, n_hashes: int, n_bands: int,
                     F.col("bb.bucket").alias("bucket")))
 
 
-def q_minhash_bands(spark, sf_dir, n_hashes: int = 16, n_bands: int = 4,
-                    portable_hash: bool = True):
+def q_minhash_bands(spark, sf_dir, n_hashes: int = 16, n_bands: int = 4):
     """MinHash+LSH candidate generation: shingle -> salted hash -> min per
     hash -> band signature -> groupBy band bucket.  Returns candidate pair
-    counts per band bucket (see _minhash_sigs for the portable-hash
-    machinery the DuckDB oracle replays)."""
+    counts per band bucket (see _minhash_sigs for the md5-derived hashes
+    the DuckDB oracle replays)."""
     docs = _t(spark, sf_dir, "documents")
-    sigs = _minhash_sigs(docs, n_hashes, portable_hash)
-    allb = _minhash_banded(sigs, n_hashes, n_bands, portable_hash)
+    sigs = _minhash_sigs(docs, n_hashes)
+    allb = _minhash_banded(sigs, n_hashes, n_bands)
     return (allb.groupBy("band", "bucket")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.min("doc_id").alias("min_doc"))
@@ -791,7 +776,6 @@ def q_minhash_bands(spark, sf_dir, n_hashes: int = 16, n_bands: int = 4,
 
 def q_minhash_est_pairs(spark, sf_dir, n_hashes: int = 16, n_bands: int = 4,
                         threshold: float = 0.5,
-                        portable_hash: bool = True,
                         max_bucket: int | None = 65536):
     """MinHash near-duplicate pairs with ESTIMATED Jaccard -- the second
     stage of the standard MinHash dedup pipeline: banding proposes
@@ -820,9 +804,8 @@ def q_minhash_est_pairs(spark, sf_dir, n_hashes: int = 16, n_bands: int = 4,
     # materialization every consumer re-ran the full shingle+minhash scan
     # (8 document scans in the before plan).  Both frames are ids+hashes
     # only -- the incremental_dedup localCheckpoint precedent.
-    sigs = _minhash_sigs(docs, n_hashes, portable_hash) \
-        .localCheckpoint(eager=True)
-    allb = _minhash_banded(sigs, n_hashes, n_bands, portable_hash)
+    sigs = _minhash_sigs(docs, n_hashes).localCheckpoint(eager=True)
+    allb = _minhash_banded(sigs, n_hashes, n_bands)
     if max_bucket is not None:
         wcap = Window.partitionBy("band", "bucket").orderBy("doc_id")
         allb = (allb.withColumn("_rn", F.row_number().over(wcap))
@@ -1805,7 +1788,7 @@ bands AS (
 
 
 def _minhash_oracle_sql(n_hashes: int = 16, n_bands: int = 4) -> str:
-    """DuckDB replay of q_minhash_bands(portable_hash=True)."""
+    """DuckDB replay of q_minhash_bands."""
     return f"""
 WITH {_minhash_ctes(n_hashes, n_bands)}
 SELECT band, bucket, COUNT(*) AS n_docs, MIN(doc_id) AS min_doc

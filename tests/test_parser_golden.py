@@ -2,6 +2,8 @@
 src/test/test.lisp and doc/examples.xml, plus the FIXTURES.md hand-built
 repair cases.  Every assertion pins byte-exact output."""
 
+import pytest
+
 from closure_html_spark.dtd import load_dtd
 from closure_html_spark.parser.charset import decode_html, sniff_charset
 from closure_html_spark.parser.pda import parse_html
@@ -300,6 +302,34 @@ def test_style_in_p_hoisted_via_resolve():
     assert got == ("HTML", (),
                    ("HEAD", (), ("STYLE", (), ".a{}")),
                    ("BODY", (), ("P", (), "x"), "y"))
+
+
+@pytest.mark.parametrize("src, html, warnings", [
+    # the reference's fix-font docstring example (sgml-parse.lisp:1407-1417):
+    # with tag-as-marker-p always nil, FONT is an ordinary inline element,
+    # so </font> closes B too and the stray </b> is nuked
+    ("<p> <font> foo <b> bar </font> baz </b>",
+     "<HTML><HEAD></HEAD><BODY><P> <FONT> foo <B> bar </B></FONT> baz </P>"
+     "</BODY></HTML>",
+     [(4, "[-] Saw ('E', 'B') in P -- nuked.")]),
+    ("<p>a</font>b",
+     "<HTML><HEAD></HEAD><BODY><P>ab</P></BODY></HTML>",
+     [(4, "[-] Saw ('E', 'FONT') in P -- nuked.")]),
+    # `p in font` heuristic (close FONT, open P, reopen FONT inside it)
+    ("<font><p>x</p></font>",
+     "<HTML><HEAD></HEAD><BODY><FONT></FONT><P><FONT>x</FONT></P></BODY>"
+     "</HTML>",
+     [(4, "[-] Saw ('E', 'FONT') in BODY -- nuked.")]),
+    ("<table><font><tr><td>a</td><td>b</td></tr></font></table>",
+     "<HTML><HEAD></HEAD><BODY><TABLE><TBODY><TR><TD>a</TD><TD>b</TD></TR>"
+     "</TBODY></TABLE></BODY></HTML>",
+     [(4, "[-] Saw ('S', 'FONT') in TABLE -- nuked."),
+      (4, "[-] Saw ('E', 'FONT') in TBODY -- nuked.")]),
+], ids=["fix_font_example", "stray_font_end", "p_in_font", "font_in_table"])
+def test_font_soup_repair(src, html, warnings):
+    doc = parse_html(DTD, src)
+    assert serialize_doc(doc, DTD) == html
+    assert doc.warnings == warnings
 
 
 def test_truncated_document_closes_stack():

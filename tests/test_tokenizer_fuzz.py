@@ -1,22 +1,22 @@
-"""Differential fuzz: the fast-path tokenizer and whole-document
-tokenize_normalized must be token-identical to the exact char machine,
-and the full parse must serialize identically via either path."""
+"""Differential fuzz: the fused parse loop (pda.sgml_parse, the one fast
+path production runs) must agree with its reference twin
+(pda._sgml_parse_ref over the exact char machine) on serialization and on
+the warning multiset -- so the fast tag regexes accept exactly what the
+char machine accepts, and tokenize the same way."""
 
 import random
+from collections import Counter
 
 import pytest
 
 from closure_html_spark.dtd import load_dtd
-from closure_html_spark.parser.normalize import (
-    normalized_tokens,
-    tokenize_normalized,
-)
 from closure_html_spark.parser.pda import (
+    _sgml_parse_ref,
     parse_html,
     post_mortem_fix_top_level,
     sgml_parse,
 )
-from closure_html_spark.parser.tokenizer import FastTokenizer, Tokenizer
+from closure_html_spark.parser.tokenizer import Tokenizer
 from closure_html_spark.serialize import serialize_doc
 
 DTD = load_dtd()
@@ -34,34 +34,25 @@ ALPHABETS = [
     # elements + charset-relevant attrs, and comment/doctype/PI edge soup
     "<script style base meta href= charset=utf-8 > </ ! -- > x & ; \" '",
     "<!-- -- > <! doctype <? proc ?> ]]> <![ x",
+    # FONT-heavy soup: FONT flows through the PDA + heuristic rules
+    # (close_reopen in FONT, the `p in font` rule), inside tables and lists
+    "<>/=&;'\"ap font b i div td tr table ul li size=2 x \n\t",
 ]
-
-
-def _cases(n_per=1500):
-    random.seed(20260816)
-    out = []
-    for chars in ALPHABETS:
-        for _ in range(n_per):
-            out.append("".join(random.choice(chars)
-                               for _ in range(random.randrange(1, 160))))
-    return out
 
 
 @pytest.mark.parametrize("alphabet_idx", range(len(ALPHABETS)))
 def test_fast_tokenizer_token_identical(alphabet_idx):
+    """The fused loop's fast tag regexes and inline pcdata decode against
+    the exact char machine, per alphabet: same tree, same warnings."""
     random.seed(alphabet_idx)
     chars = ALPHABETS[alphabet_idx]
     for _ in range(1500):
         fx = "".join(random.choice(chars)
                      for _ in range(random.randrange(1, 160)))
-        slow = list(Tokenizer(fx, DTD.entities).tokens())
-        fast = list(FastTokenizer(fx, DTD.entities).tokens())
-        assert slow == fast, fx
-        merged, mtk = tokenize_normalized(fx, DTD)
-        gtk = FastTokenizer(fx, DTD.entities)
-        gen = list(normalized_tokens(gtk, DTD))
-        assert merged == gen, fx
-        assert mtk.warnings == gtk.warnings, fx
+        fast = sgml_parse(DTD, fx)
+        ref = _sgml_parse_ref(DTD, fx, Tokenizer(fx, DTD.entities))
+        assert serialize_doc(fast, DTD) == serialize_doc(ref, DTD), fx
+        assert Counter(fast.warnings) == Counter(ref.warnings), fx
 
 
 def test_full_parse_serialization_identical():
@@ -71,7 +62,7 @@ def test_full_parse_serialization_identical():
         fx = "".join(random.choice(chars)
                      for _ in range(random.randrange(1, 250)))
         fast = serialize_doc(parse_html(DTD, fx), DTD)
-        doc = sgml_parse(DTD, fx, tokenizer=Tokenizer(fx, DTD.entities))
+        doc = _sgml_parse_ref(DTD, fx, Tokenizer(fx, DTD.entities))
         post_mortem_fix_top_level(doc)
         slow = serialize_doc(doc, DTD)
         assert fast == slow, fx
@@ -82,9 +73,6 @@ def test_fused_warning_multiset_identical():
     reference twin must agree on serialization AND on the warning multiset
     (fused interleaves tokenizer/PDA warnings in stream order, so exact
     order is not pinned -- content and counts are)."""
-    from collections import Counter
-
-    from closure_html_spark.parser.pda import _sgml_parse_ref
     random.seed(7)
     frag = ["&amp;", "&lt;", "&bogus;", "&#65;", "&#x41;", "&#999999;",
             "&", "&amp", "<b>", "</b>", "x", " ", "²", "&#x2F;", "&copy",
