@@ -34,10 +34,8 @@ from closure_html_spark.spark.pages import (
 )
 from closure_html_spark.spark.multimodal import (
     ORACLE_MEDIA_DECODE,
-    ORACLE_MEDIA_META,
     ORACLE_MEDIA_PHASH,
     q_media_decode,
-    q_media_meta,
     q_media_phash_neardup,
 )
 from closure_html_spark.spark.pdfs import ORACLE_PDF_EXTRACT, q_pdf_extract
@@ -54,7 +52,6 @@ from closure_html_spark.spark.pipeline import (
     nodes_of,
     serialize_pages,
     tables_of,
-    tokens_of,
 )
 
 
@@ -103,27 +100,6 @@ def _q_serialize_roundtrip(spark, sf_dir):
             .orderBy("doc_id"))
 
 
-def _q_tokens_histogram(spark, sf_dir):
-    """Lexer token-kind histogram over the parsed corpus (tokens table)."""
-    pages = pages_from_documents(spark, sf_dir)
-    toks = tokens_of(pages, id_cols=("doc_id",))
-    return (toks.groupBy("kind")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy("kind"))
-
-
-def _q_host_stats(spark, sf_dir):
-    """Per-host page counts + bytes over the synthesized corpus: the skew
-    fixture surface (host0 holds ~30%% of pages).  Oracle replays the host
-    assignment rule in SQL."""
-    pages = pages_from_documents(spark, sf_dir)
-    host = F.regexp_extract("url", r"https://([^/]+)/", 1)
-    return (pages.groupBy(host.alias("host"))
-            .agg(F.count(F.lit(1)).alias("n_pages"),
-                 F.sum(F.length("html")).alias("bytes_total"))
-            .orderBy(F.desc("n_pages"), "host"))
-
-
 def _q_warn_histogram(spark, sf_dir):
     """Corpus warning metrics by parse-warn level (1-5): the reference's
     warning channel as aggregable counters.  Variant templates 1-3 contain
@@ -137,23 +113,6 @@ def _q_warn_histogram(spark, sf_dir):
             .groupBy((F.col("level0") + 1).alias("level"))
             .agg(F.sum("n").alias("n_warnings"))
             .orderBy("level"))
-
-
-def _q_extract_links(spark, sf_dir):
-    """Outlink extraction -- the crawl-frontier feed: hrefs of <A> nodes in
-    document order, emitted by the extract stage itself as a
-    `links array<string>` column (columns=("links",) projection), so the
-    frontier consumer never materializes the full per-node table -- no
-    explode, no shuffle until the final per-doc shaping.  Template 0 pages
-    carry exactly three links (/, /about, /c), so the oracle is closed-form
-    and breaks loudly on any attr-parsing drift."""
-    pages = pages_from_documents(spark, sf_dir)
-    ext = extract_pages(pages, id_cols=("doc_id",), columns=("links",))
-    return (ext.select(
-        "doc_id",
-        F.size("links").cast("long").alias("n_links"),
-        F.array_join(F.array_sort("links"), ",").alias("hrefs"))
-        .orderBy("doc_id"))
 
 
 def _q_anchor_text(spark, sf_dir):
@@ -612,29 +571,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "host_boilerplate_clean": R.q_host_boilerplate_clean,
         # --- round-7 additions (never driver-verified) ---
         # structured <table> extraction: soup + well-formed twins must
-        # repair to identical grids (tokens_histogram demoted to aux for
-        # the slot: any tokenizer drift already breaks every extraction
-        # gate's byte-pinned text; the tokens TABLE shape keeps aux replay)
+        # repair to identical grids
         "html_tables": _q_html_tables,
         # head metadata: title/description/og:title/canonical/h1
-        # (host_stats demoted: it replayed the synthesis rule, gating no
-        # machinery the agg + url gates don't)
         "doc_metadata": _q_doc_metadata,
         # Okapi BM25 top-k retrieval, one-pass corpus stats re-entering
-        # as a broadcast (sentence_chunks demoted: pure column exprs,
-        # oracle survives in aux)
+        # as a broadcast
         "bm25_topk": R.q_bm25_topk,
         # SemDeDup: IVF-cell-bucketed semantic near-dup removal -- the
-        # scale answer to the demoted O(N^2) exact baseline (media_meta
-        # demoted: projection twin of the still-gated media_decode).
+        # scale answer to the demoted O(N^2) exact baseline.
         # n_cells pinned to the static oracle constant exactly like the
         # ann_ivf_topk gate; the self-sizing rule is tested separately
         "semantic_dedup": lambda s, d: R.q_semantic_dedup(s, d, n_cells=16),
         # adversarial parser corpus (round-6 verdict #2): deep nesting /
         # pcdata flood / entity bomb / bad-tag storm / charset lie, all
-        # closed-form oracled (string_datetime demoted to aux for the
-        # slot; its string/datetime machinery stays gated via
-        # sessionize + url_canonical)
+        # closed-form oracled
         "extract_hostile": _q_extract_hostile,
         # --- never driver-verified before round 6 (new or past-window) ---
         # one wide extraction gate: title/text/main/spans in one pass
@@ -675,8 +626,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # coverage reports (q_repeated_spans, q_dup_coverage) replay in aux
         "repeated_span_clean": R.q_repeated_span_clean,
         # inbound anchor-text aggregation over the (links, anchors)
-        # parallel arrays (late r6; extract_links demoted to aux -- its
-        # href machinery stays gated via extract_variants AND this)
+        # parallel arrays
         "anchor_text": _q_anchor_text,
         "simhash": R.q_simhash,
         # (embedding_neardup -- the EXACT O(N^2) crossJoin baseline --
@@ -694,33 +644,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # propagation; band_bits pinned like the pair query it builds on)
         "neardup_clusters": lambda s, d: R.q_neardup_clusters(
             s, d, band_bits=4),
-        # multimodal plumbing (media_meta demoted to aux round 7)
+        # multimodal plumbing
         "media_decode": q_media_decode,
         # --- full-pipeline extraction (parse + repair + extract) ---
         "serialize_roundtrip": _q_serialize_roundtrip,
         "nodes_histogram": _q_nodes_histogram,
-        # (extract_links demoted to aux late r6 for anchor_text: per-doc
-        # href extraction stays driver-gated via extract_variants)
-        # (tokens_histogram + host_stats demoted to aux round 7, see the
-        # round-7 additions block for the rationale)
         "warn_histogram": _q_warn_histogram,
         # --- relational shell (SURVEY.md §2.10) ---
         "pricing_summary": R.q_pricing_summary,
         "top_revenue_nations": R.q_top_revenue_nations,
-        # (order_priority demoted to aux round 6; r2+ green, its
-        # join+agg+sort pattern stays gated via top_revenue_nations;
-        # window_user_events likewise demoted late round 6 -- the window
+        # (window_user_events demoted to aux late round 6 -- the window
         # capability stays gated via sessionize)
         "sessionize": R.q_sessionize,
-        # (set_ops demoted to aux round 6 to make room; r2+ green;
-        # string_datetime demoted round 7 for extract_hostile)
         # --- training-data ops ---
         "dedup_exact": R.q_dedup_exact,
-        # realistic C4-style span length (round-3 verdict #7: 3 words is a
-        # toy; 50-word shared spans are near-certain cross-doc duplication;
-        # the toy chunk_words=3 report stays in aux_queries)
-        "paragraph_dedup_50": lambda s, d: R.q_paragraph_dedup(
-            s, d, chunk_words=50),
+        # realistic C4-style span length: 50-word shared spans are
+        # near-certain cross-doc duplication
+        "paragraph_dedup_50": R.q_paragraph_dedup,
         # the removal transform that follows the report: clean_text with
         # globally duplicated 50-word chunks removed (one survivor each)
         "paragraph_clean_50": lambda s, d: R.q_paragraph_dedup_clean(
@@ -728,17 +668,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "url_canonical": R.q_url_canonical,
         # the frontier's RFC 3986 link resolution, replayed in batch
         "resolve_href": R.q_resolve_href,
-        # corpus scrubbing / segmentation transforms
+        # corpus scrubbing transform
         "pii_redact": R.q_pii_redact,
         # crawl politeness: robots.txt groups + longest-match verdicts
         "robots_filter": R.q_robots_filter,
-        # (sentence_chunks demoted to aux round 7 for bm25_topk)
         # host-graph PageRank (iterative; crawl prioritization signal)
         "host_pagerank": R.q_host_pagerank,
         "tfidf_topk": R.q_tfidf_topk,
         "repetition_stats": R.q_repetition_stats,
-        # (q_fingerprint demoted to aux round 6: the winnowing variant
-        # below subsumes the rolling-hash machinery under the gate)
         "winnow_fingerprint": R.q_winnow_fingerprint,
         "jaccard_pairs": R.q_jaccard_pairs,
         # EXACT brute-force top-k baseline (broadcast query side); the
@@ -750,9 +687,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # signature-agreement machinery runs under the gate through BOTH
         # text_dedup_clean and incremental_dedup)
         # the kept corpus: survivors + untouched docs with their text
-        # (text_dedup_clusters demoted to aux round 6: clean consumes the
-        # same connected-components labels; mime_class likewise -- both
-        # were driver-green in r4+r5 and keep local DuckDB replay)
         "text_dedup_clean": R.q_text_dedup_clean,
         "lang_id": R.q_lang_id,
     }
@@ -768,16 +702,12 @@ def aux_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     text_stats / quality_signals / normalize_text is exercised THROUGH
     those gates and needs no aux entry.)"""
     return {
-        # toy chunk size kept as the documented small-span report
-        "paragraph_dedup": R.q_paragraph_dedup,
         # banded signature report (minhash_est_pairs consumes these bands)
         "minhash_bands": R.q_minhash_bands,
         # per-doc distinct-shingle counts (jaccard's input representation)
         "ngram_shingles": R.q_ngram_shingles,
         # demoted from the gate round 6 to make room for the corpus
         # assembly + decontamination ops (driver-green r4+r5)
-        "fingerprint": R.q_fingerprint,
-        "text_dedup_clusters": R.q_text_dedup_clusters,
         "mime_class": R.q_mime_class,
         # the decontaminated corpus (report is under the gate)
         "decontaminate_clean": R.q_decontaminate_clean,
@@ -786,17 +716,13 @@ def aux_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # demoted r6 (machinery gated via text_dedup_clean +
         # incremental_dedup)
         "minhash_est_pairs": R.q_minhash_est_pairs,
-        "set_ops": R.q_set_ops,
+        # kept: no gate plan has a LeftSemi join
         "order_priority": R.q_order_priority,
-        # demoted r7 for extract_hostile (string fns stay driver-gated
-        # via url_canonical, datetime via sessionize)
+        # kept: no gate plan has upper/year/month/date_format
         "string_datetime": R.q_string_datetime,
         # demoted late r6 for repeated_span_clean (window capability
         # stays driver-gated via sessionize)
         "window_user_events": R.q_window_user_events,
-        # demoted late r6 for anchor_text (href machinery stays gated
-        # via extract_variants + anchor_text)
-        "extract_links": _q_extract_links,
         # registry-external r6 ops: standing local replay
         # (the full raw-HTML -> cleaned -> packed-sequences chain)
         "corpus_to_sequences": _q_corpus_to_sequences,
@@ -823,12 +749,6 @@ def aux_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "url_blocklist": R.q_url_blocklist,
         # per-language data-card report (one partial-agg pass)
         "corpus_datasheet": R.q_corpus_datasheet,
-        # demoted r7 for the html_tables/doc_metadata/bm25/semantic_dedup
-        # promotions (rationale inline in queries())
-        "tokens_histogram": _q_tokens_histogram,
-        "host_stats": _q_host_stats,
-        "sentence_chunks": R.q_sentence_chunks,
-        "media_meta": q_media_meta,
         # round-7 addition: schema.org JSON-LD (raw payload via Arrow
         # stage, fields via JVM-side from_json)
         "jsonld_extract": _q_jsonld_extract,
@@ -874,22 +794,15 @@ def aux_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def aux_oracle_sql() -> dict[str, str]:
     return {
-        "paragraph_dedup": R.ORACLE_PARAGRAPH_DEDUP,
         "minhash_bands": R.ORACLE_MINHASH,
         "ngram_shingles": R.ORACLE_NGRAM,
-        "fingerprint": R.ORACLE_FINGERPRINT,
-        "text_dedup_clusters": R.ORACLE_TEXT_DEDUP_CLUSTERS,
         "mime_class": R.ORACLE_MIME_CLASS,
         "decontaminate_clean": R.ORACLE_DECONTAMINATE_CLEAN,
         "domain_mix": R.ORACLE_DOMAIN_MIX,
         "minhash_est_pairs": R.ORACLE_MINHASH_EST,
-        "set_ops": R.ORACLE_SET_OPS,
         "order_priority": R.ORACLE_ORDER_PRIORITY,
         "string_datetime": R.ORACLE_STRING_DATETIME,
         "window_user_events": R.ORACLE_WINDOW,
-        "extract_links": (
-            "SELECT doc_id, CAST(3 AS BIGINT) AS n_links, "
-            "'/,/about,/c' AS hrefs FROM documents ORDER BY doc_id"),
         "corpus_to_sequences": ORACLE_CORPUS_TO_SEQUENCES,
         "bpe_tokenize": R.ORACLE_BPE_TOKENIZE,
         "lm_perplexity": R.ORACLE_LM_PERPLEXITY,
@@ -904,39 +817,6 @@ def aux_oracle_sql() -> dict[str, str]:
         "sitemap_urls": R.ORACLE_SITEMAP_URLS,
         "url_blocklist": R.ORACLE_URL_BLOCKLIST,
         "corpus_datasheet": R.ORACLE_CORPUS_DATASHEET,
-        "sentence_chunks": R.ORACLE_SENTENCE_CHUNKS,
-        "media_meta": ORACLE_MEDIA_META,
-        "tokens_histogram": """
-WITH n AS (SELECT COUNT(*) AS d,
-                  COUNT(*) FILTER (WHERE LENGTH(text) > 0) AS dt
-           FROM documents)
-SELECT * FROM (
-  SELECT 'end' AS kind, 10*d AS n FROM n
-  UNION ALL SELECT 'eof', 1*d FROM n
-  UNION ALL SELECT 'pcdata', 6*d + dt FROM n
-  UNION ALL SELECT 'start', 10*d FROM n
-) ORDER BY kind
-""",
-        "host_stats": """
-WITH p AS (
-  SELECT doc_id,
-         'host' || CAST(CASE WHEN doc_id % 10 < 3 THEN 0
-                             ELSE doc_id % 50 END AS VARCHAR)
-           || '.example' AS host,
-         octet_length(encode(
-           '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR)
-           || '</title></head><body>'
-           || '<div id=nav><a href=/>home</a> <a href=/about>about</a></div>'
-           || '<p>' || replace(replace(replace(text, '&', '&amp;'),
-                               '<', '&lt;'), '>', '&gt;') || '</p>'
-           || '<div class=footer><a href=/c>contact</a> &copy; 2026</div>'
-           || '</body></html>')) AS nbytes
-  FROM documents
-)
-SELECT host, COUNT(*) AS n_pages,
-       CAST(SUM(nbytes) AS BIGINT) AS bytes_total
-FROM p GROUP BY host ORDER BY n_pages DESC, host
-""",
         "jsonld_extract": ORACLE_JSONLD,
         "pq_encode": R.ORACLE_PQ_ENCODE,
         "ann_pq_topk": R.ORACLE_ANN_PQ,

@@ -220,27 +220,6 @@ FROM documents ORDER BY doc_id
 """
 
 
-def q_media_meta(spark, sf_dir):
-    """Typed-metadata projection + aggregation by mime class."""
-    media = media_from_documents(spark, sf_dir)
-    return (media.groupBy("mime")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.avg(F.col("meta.width")).alias("avg_w"),
-                 F.max(F.col("meta.n_frames")).alias("max_frames"))
-            .orderBy("mime"))
-
-
-ORACLE_MEDIA_META = """
-SELECT CASE WHEN doc_id % 3 = 0 THEN 'fake/image'
-            WHEN doc_id % 3 = 1 THEN 'fake/audio'
-            ELSE 'fake/video' END AS mime,
-       COUNT(*) AS n,
-       AVG(CAST(doc_id % 640 + 16 AS INT)) AS avg_w,
-       CAST(MAX(doc_id % 30 + 1) AS INT) AS max_frames
-FROM documents GROUP BY 1 ORDER BY mime
-"""
-
-
 def q_media_phash_neardup(spark, sf_dir, max_hamming: int = 1,
                           max_bucket: int | None = None):
     """Perceptual-hash near-duplicate detection for the image modality:

@@ -159,24 +159,6 @@ FROM sess GROUP BY user_id, session_no ORDER BY user_id, session_no
 """
 
 
-def q_set_ops(spark, sf_dir):
-    """Set operations: large parts never shipped in high-quantity lines."""
-    part = (_t(spark, sf_dir, "part")
-            .filter(F.col("p_size") > 40).select("p_partkey"))
-    li = (_t(spark, sf_dir, "lineitem")
-          .filter(F.col("l_quantity") > 45)
-          .select(F.col("l_partkey").alias("p_partkey")))
-    return part.distinct().subtract(li.distinct()).orderBy("p_partkey")
-
-
-ORACLE_SET_OPS = """
-SELECT p_partkey FROM part WHERE p_size > 40
-EXCEPT
-SELECT l_partkey FROM lineitem WHERE l_quantity > 45
-ORDER BY p_partkey
-"""
-
-
 def q_string_datetime(spark, sf_dir):
     """String + datetime function surface over orders."""
     ords = _t(spark, sf_dir, "orders")
@@ -284,19 +266,6 @@ SELECT doc_id,
              / LEN(regexp_split_to_array(TRIM(text), '\\s+')), 4) AS stop_ratio,
        ROUND((LENGTH(text) + 1) / LEN(regexp_split_to_array(TRIM(text), '\\s+')), 4)
          AS mean_wlen
-FROM documents ORDER BY doc_id
-"""
-
-
-def q_fingerprint(spark, sf_dir):
-    """Document fingerprint: md5 over whitespace-normalized lowercase text."""
-    docs = _t(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    return docs.select("doc_id", F.md5(norm).alias("fp")).orderBy("doc_id")
-
-
-ORACLE_FINGERPRINT = """
-SELECT doc_id, MD5(regexp_replace(LOWER(TRIM(text)), '\\s+', ' ', 'g')) AS fp
 FROM documents ORDER BY doc_id
 """
 
@@ -833,7 +802,7 @@ def q_minhash_est_pairs(spark, sf_dir, n_hashes: int = 16, n_bands: int = 4,
             .orderBy("a_id", "b_id"))
 
 
-def q_paragraph_dedup(spark, sf_dir, chunk_words: int = 3):
+def q_paragraph_dedup(spark, sf_dir, chunk_words: int = 50):
     """Sub-document exact dedup (C4-style): split each document into
     non-overlapping `chunk_words`-word chunks, hash, report chunks that
     appear in more than one document.  The per-doc transform/slice lambda
@@ -862,11 +831,10 @@ def q_paragraph_dedup(spark, sf_dir, chunk_words: int = 3):
             .orderBy("h"))
 
 
-def _paragraph_dedup_oracle_sql(chunk_words: int = 3) -> str:
-    """DuckDB replay of q_paragraph_dedup at any chunk size.  chunk_words=3
-    is the toy gate default; chunk_words=50 is the realistic C4-style span
-    length (a 50-word chunk shared across docs is near-certain duplication,
-    not coincidence) -- both sizes run at the correctness gate."""
+def _paragraph_dedup_oracle_sql(chunk_words: int = 50) -> str:
+    """DuckDB replay of q_paragraph_dedup at any chunk size.  The default
+    is the realistic C4-style span length (a 50-word chunk shared across
+    docs is near-certain duplication, not coincidence)."""
     k = chunk_words
     return f"""
 WITH w AS (
@@ -885,8 +853,7 @@ FROM c GROUP BY 1 HAVING COUNT(DISTINCT doc_id) > 1 ORDER BY h
 """
 
 
-ORACLE_PARAGRAPH_DEDUP = _paragraph_dedup_oracle_sql()
-ORACLE_PARAGRAPH_DEDUP_50 = _paragraph_dedup_oracle_sql(50)
+ORACLE_PARAGRAPH_DEDUP_50 = _paragraph_dedup_oracle_sql()
 
 
 def q_paragraph_dedup_clean(spark, sf_dir, chunk_words: int = 50):
@@ -1685,44 +1652,6 @@ FROM d ORDER BY doc_id
 """
 
 
-def q_sentence_chunks(spark, sf_dir):
-    """Sentence segmentation -- the unit C4's three-sentence spans and
-    most span-level dedup operate on: split on terminal punctuation runs,
-    emit per-doc sentence count and the segmented array.  The corpus text
-    carries no punctuation, so each doc is prefixed with three
-    deterministic sentences and the closed form is exact."""
-    docs = _t(spark, sf_dir, "documents")
-    i = F.col("doc_id").cast("string")
-    prose = F.concat(
-        F.lit("First sentence of doc "), i,
-        F.lit(". Second one! Is this the third? "), F.col("text"))
-    sents = F.filter(F.split(F.trim(prose), r"[.!?]+\s*"),
-                     lambda s: s != "")
-    return (docs.select(
-        "doc_id",
-        F.size(sents).alias("n_sentences"),
-        F.array_join(sents, "|").alias("sentences"))
-        .orderBy("doc_id"))
-
-
-ORACLE_SENTENCE_CHUNKS = r"""
-WITH p AS (
-  SELECT doc_id,
-         list_filter(
-           regexp_split_to_array(
-             TRIM('First sentence of doc ' || doc_id
-                  || '. Second one! Is this the third? ' || text),
-             '[.!?]+\s*'),
-           s -> s <> '') AS sents
-  FROM documents
-)
-SELECT doc_id,
-       LEN(sents) AS n_sentences,
-       array_to_string(sents, '|') AS sentences
-FROM p ORDER BY doc_id
-"""
-
-
 def q_mojibake_fix(spark, sf_dir):
     """Mojibake repair (ftfy's core case): text that was UTF-8 but got
     decoded as latin-1 ("café" -> "cafÃ©") is re-encoded as latin-1 and
@@ -1824,64 +1753,6 @@ ORACLE_MINHASH = _minhash_oracle_sql()
 ORACLE_MINHASH_EST = _minhash_est_oracle_sql()
 
 
-def q_text_dedup_clusters(spark, sf_dir, threshold: float = 0.7,
-                          n_hashes: int = 16, n_bands: int = 4,
-                          max_iter: int = 25):
-    """The complete TEXT near-dup pipeline end: MinHash banding proposes
-    candidates, the signature estimator scores them (q_minhash_est_pairs),
-    and connected components assign every involved document to a cluster
-    with one survivor -- the doc_id-level counterpart of
-    q_neardup_clusters (which runs on embeddings).  Everything before the
-    iterative clustering is a single signatures-only job; the cluster
-    loop touches only the (tiny) pair graph."""
-    pairs = q_minhash_est_pairs(spark, sf_dir, n_hashes, n_bands,
-                                threshold).select("a_id", "b_id")
-    labels = connected_components(pairs, max_iter=max_iter)
-    return (labels.select(
-        F.col("id").alias("doc_id"), F.col("label").alias("cluster"),
-        (F.col("id") == F.col("label")).alias("is_survivor"))
-        .orderBy("doc_id"))
-
-
-def _text_dedup_clusters_oracle_sql(threshold: float = 0.7,
-                                    n_hashes: int = 16,
-                                    n_bands: int = 4) -> str:
-    """Recursive closure over the MinHash-estimated pair graph (same
-    signature constants as ORACLE_MINHASH_EST)."""
-    agree = " + ".join(f"(x.h{h} = y.h{h})::INT" for h in range(n_hashes))
-    return f"""
-WITH RECURSIVE {_minhash_ctes(n_hashes, n_bands)},
-cand AS (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-),
-near AS (
-  SELECT c.a_id, c.b_id
-  FROM cand c
-  JOIN hx x ON x.doc_id = c.a_id
-  JOIN hx y ON y.doc_id = c.b_id
-  WHERE ROUND(({agree}) / {n_hashes}.0, 4) >= {threshold}
-),
-edges AS (
-  SELECT a_id AS src, b_id AS dst FROM near
-  UNION SELECT b_id, a_id FROM near
-),
-reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-)
-SELECT src AS doc_id,
-       LEAST(src, MIN(dst)) AS cluster,
-       src = LEAST(src, MIN(dst)) AS is_survivor
-FROM reach GROUP BY src ORDER BY doc_id
-"""
-
-
-ORACLE_TEXT_DEDUP_CLUSTERS = _text_dedup_clusters_oracle_sql()
-
-
 def q_text_dedup_clean(spark, sf_dir, threshold: float = 0.7,
                        n_hashes: int = 16, n_bands: int = 4,
                        max_iter: int = 25):
@@ -1905,8 +1776,9 @@ def q_text_dedup_clean(spark, sf_dir, threshold: float = 0.7,
 def _text_dedup_clean_oracle_sql(threshold: float = 0.7,
                                  n_hashes: int = 16,
                                  n_bands: int = 4) -> str:
-    """Survivor anti-join over the same recursive pair-graph closure as
-    ORACLE_TEXT_DEDUP_CLUSTERS."""
+    """Survivor anti-join over the recursive transitive closure of the
+    MinHash-estimated pair graph (same signature constants as
+    ORACLE_MINHASH_EST)."""
     agree = " + ".join(f"(x.h{h} = y.h{h})::INT" for h in range(n_hashes))
     return f"""
 WITH RECURSIVE {_minhash_ctes(n_hashes, n_bands)},

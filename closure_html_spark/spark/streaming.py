@@ -240,14 +240,6 @@ def stream_dedup(pages: DataFrame, key_col: str = "url",
     )
 
 
-def stream_dedup_urls(pages: DataFrame, n_groups: int = 64,
-                      m_bits: int = 1 << 23) -> DataFrame:
-    """First-seen URL dedup: stream_dedup specialized to the crawl
-    frontier (kept as the named operator the tests/docs reference)."""
-    return stream_dedup(pages, key_col="url", n_groups=n_groups,
-                        m_bits=m_bits)
-
-
 def stream_frontier(pages: DataFrame, n_groups: int = 64,
                     m_bits: int = 1 << 23,
                     robots: DataFrame | None = None) -> DataFrame:

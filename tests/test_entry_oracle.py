@@ -61,6 +61,54 @@ def test_registry_consistency():
     assert set(entry_mod.aux_oracle_sql()) == aux
 
 
+def test_frozen_harnesses_resolve():
+    """bench.py and perfbench/ look names up only when a leg runs, so a
+    deleted query or helper would pass every other test and break them.
+    Resolve every package name they use: `from closure_html_spark... import
+    x`, bench.py's `R.<attr>` and `entry.queries()["name"]`, and the
+    corpus_dedup workload's QUERIES (each with an oracle)."""
+    import ast
+    import importlib
+    from pathlib import Path
+
+    from closure_html_spark.spark import relational as R
+
+    root = Path(entry_mod.__file__).parent
+    registry = {**entry_mod.queries(), **entry_mod.aux_queries()}
+    oracles = {**entry_mod.oracle_sql(), **entry_mod.aux_oracle_sql()}
+    missing, corpus_queries = [], ()
+    harness = [root / "bench.py", *sorted((root / "perfbench").glob("*.py"))]
+    for path in harness:
+        tree = ast.parse(path.read_text())
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.ImportFrom) and node.module
+                    and node.module.startswith("closure_html_spark")):
+                mod = importlib.import_module(node.module)
+                missing += [f"{path.name}: {node.module}.{a.name}"
+                            for a in node.names if not hasattr(mod, a.name)]
+            elif (path.name == "bench.py" and isinstance(node, ast.Attribute)
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id == "R" and not hasattr(R, node.attr)):
+                missing.append(f"bench.py: R.{node.attr}")
+            elif (isinstance(node, ast.Subscript)
+                    and isinstance(node.value, ast.Call)
+                    and isinstance(node.value.func, ast.Attribute)
+                    and node.value.func.attr in ("queries", "aux_queries")
+                    and isinstance(node.slice, ast.Constant)
+                    and node.slice.value not in registry):
+                missing.append(f"{path.name}: query {node.slice.value}")
+            elif (isinstance(node, ast.ClassDef)
+                    and node.name == "CorpusDedup"):
+                corpus_queries = next(
+                    ast.literal_eval(s.value) for s in node.body
+                    if isinstance(s, ast.Assign)
+                    and s.targets[0].id == "QUERIES")
+    assert corpus_queries, "perfbench CorpusDedup.QUERIES not found"
+    missing += [f"corpus_dedup: {q}" for q in corpus_queries
+                if q not in registry or q not in oracles]
+    assert not missing, missing
+
+
 def _lookup(name):
     return {**entry_mod.queries(), **entry_mod.aux_queries()}[name], \
         {**entry_mod.oracle_sql(), **entry_mod.aux_oracle_sql()}.get(name)

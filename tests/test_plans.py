@@ -165,13 +165,21 @@ def test_corpus_clean_no_text_exchange(spark):
 
 
 def test_extract_links_no_node_table(spark, tmp_path_factory):
-    """extract_links must NOT route through the exploded nodes stage: the
-    plan is scan -> mapInArrow (links column) -> projection, with no
-    Generate/explode before the stage and no groupBy shuffle over
-    per-node rows (only the final per-doc sort remains)."""
+    """Per-doc links must come from the extract stage, NOT from the
+    exploded nodes stage: the plan is scan -> mapInArrow (links column)
+    -> projection, with no Generate/explode before the stage and no
+    groupBy shuffle over per-node rows (only the final per-doc sort
+    remains)."""
+    from pyspark.sql import functions as F
+
     from closure_html_spark.spark.pages import pages_from_documents
-    import __spark_entry__ as entry
-    df = entry.aux_queries()["extract_links"](spark, SF)
+    pages = pages_from_documents(spark, SF)
+    ext = extract_pages(pages, id_cols=("doc_id",), columns=("links",))
+    df = (ext.select(
+        "doc_id",
+        F.size("links").cast("long").alias("n_links"),
+        F.array_join(F.array_sort("links"), ",").alias("hrefs"))
+        .orderBy("doc_id"))
     plan = plan_of(df)
     assert "MapInArrow" in plan
     # no per-node explode (posexplode in nodes_of) and no aggregation

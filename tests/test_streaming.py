@@ -68,7 +68,7 @@ def test_stream_dedup_urls_stateful(spark, tmp_path_factory):
     AND across restarts (state from checkpoint) are dropped."""
     from pyspark.sql import functions as F
 
-    from closure_html_spark.spark.streaming import stream_dedup_urls
+    from closure_html_spark.spark.streaming import stream_dedup
 
     in_dir = str(tmp_path_factory.mktemp("dedup_in"))
     out_dir = str(tmp_path_factory.mktemp("dedup_out"))
@@ -83,7 +83,7 @@ def test_stream_dedup_urls_stateful(spark, tmp_path_factory):
         stream = (spark.readStream
                   .schema("url string, warc_ts timestamp, html binary")
                   .parquet(in_dir))
-        dedup = stream_dedup_urls(stream, n_groups=8)
+        dedup = stream_dedup(stream, key_col="url", n_groups=8)
         q = (dedup.writeStream.format("parquet").option("path", out_dir)
              .option("checkpointLocation", ckpt)
              .outputMode("append").trigger(availableNow=True).start())
